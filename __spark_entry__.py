@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from crawlee_spark.functions.keying import host_col, normalize_url_udf, registrable_domain_col, request_id_col
+from crawlee_spark.functions.keying import host_col, registrable_domain_col, request_id_col, unique_key_col
 from crawlee_spark.functions.html_text import extract_links_udf, html_to_text_udf
 from crawlee_spark.functions.robots import robots_allowed_udf
 from crawlee_spark.functions import text_analysis as TA
@@ -31,6 +31,7 @@ from crawlee_spark.operators import dedup as DD
 from crawlee_spark.operators import similarity as SIM
 from crawlee_spark.operators.multimodal import sniff_format_col
 from crawlee_spark.operators.scheduler import per_key_topk
+from crawlee_spark.operators.sizing import spread
 
 # ---------------------------------------------------------------------------
 # shared synthetic inputs (must match the oracle CTEs textually below)
@@ -43,16 +44,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session's default parallelism before
-    heavy per-row work (UDFs, hash/regex chains): the sf tables are
-    single-row-group parquet files, so without this the whole per-row pass
-    runs in ONE task no matter how many splits the scan planner makes (a
-    parquet reader only materializes row groups whose midpoint falls in its
-    split). The shuffled bytes are tiny next to the per-row compute."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _url_universe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,7 +186,7 @@ def q_url_keying(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PSL) and the one-shot bench pays the extra exchange stage cold —
     # paired runs measured the spread flat-to-worse here
     uni = _url_universe(spark, sf_dir)
-    uk = F.coalesce(normalize_url_udf("url"), F.col("url"))
+    uk = unique_key_col("url")
     # host materializes once and feeds the PSL lookup as an attribute (the
     # inline form ran the try_parse_url twice per row)
     hosted = uni.withColumn("host", host_col("url"))
@@ -253,8 +244,8 @@ def q_enqueue_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.concat(F.col("base_url"), F.lit("#dup")).alias("url"),
                 (F.col("doc_id") * 2 + 1).alias("arrival"))
     )
-    cand = _spread(first.unionByName(dups))
-    uk = F.coalesce(normalize_url_udf("url"), F.col("url"))
+    cand = spread(first.unionByName(dups))
+    uk = unique_key_col("url")
     return (
         cand.withColumn("unique_key", uk)
         .groupBy("unique_key")
@@ -340,7 +331,7 @@ def q_stats_outcomes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2: byte-identical htmlToText over synthesized HTML (the oracle derives
     the expected text independently from the block/whitespace rules)."""
-    uni = _spread(_url_universe(spark, sf_dir))
+    uni = spread(_url_universe(spark, sf_dir))
     html = F.concat(
         F.lit("<html><body><h1>Doc "), F.col("doc_id").cast("string"),
         F.lit("</h1><p>"), F.col("text"), F.lit("</p></body></html>"),
@@ -351,7 +342,7 @@ def q_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1: extractUrlsFromCheerio with relative-href resolution against the
     page URL."""
-    uni = _spread(_url_universe(spark, sf_dir))
+    uni = spread(_url_universe(spark, sf_dir))
     html = F.concat(
         F.lit('<html><body><a href="/docs/'), ((F.col("doc_id") + 1)).cast("string"),
         F.lit('">n</a><a href="https://other.example.net/x/'), (F.col("doc_id") % 97).cast("string"),
@@ -367,7 +358,7 @@ def q_extract_urls_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3/E8: URL_NO_COMMAS_REGEX scan over plain text (comma terminates)."""
     from crawlee_spark.sources.urls import extract_urls_col
 
-    d = _spread(_docs(spark, sf_dir))
+    d = spread(_docs(spark, sf_dir))
     line = F.concat(
         F.lit("visit https://www."), F.col("source"), F.lit(".example.com/docs/"),
         F.col("doc_id").cast("string"),
@@ -401,7 +392,7 @@ def q_sitemap_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4/S5: <urlset> XML parse — loc/lastmod/changefreq/priority rules."""
     from crawlee_spark.sources.sitemap import parse_sitemap_xml
 
-    d = _spread(_docs(spark, sf_dir))
+    d = spread(_docs(spark, sf_dir))
     ds = F.col("doc_id").cast("string")
     xml = F.concat(
         F.lit("<urlset><url><loc>https://www."), F.col("source"), F.lit(".example.com/docs/"), ds,
@@ -462,7 +453,7 @@ def q_social_handles(spark: SparkSession, sf_dir: str) -> DataFrame:
         social_handles_cols,
     )
 
-    d = _spread(_docs(spark, sf_dir))
+    d = spread(_docs(spark, sf_dir))
     ds = F.col("doc_id").cast("string")
     html = F.concat(
         F.lit("<p>mail a"), ds, F.lit("@ex"), (F.col("doc_id") % 7).cast("string"),
@@ -487,7 +478,7 @@ def q_blocked_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     iframe, 3 a decoy (right id, wrong iframe src), else clean."""
     from crawlee_spark.functions.html_text import blocked_selectors_udf
 
-    d = _spread(_docs(spark, sf_dir))
+    d = spread(_docs(spark, sf_dir))
     html = (
         F.when(
             F.col("doc_id") % 7 == 0,
@@ -552,7 +543,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pays ~21 regex splits/row — text_quality_before.txt), and
     # CollapseProject re-inlines adjacent projections, so only a real
     # distribution barrier keeps the token arrays materialized once.
-    toked = _spread(
+    toked = spread(
         d.select("doc_id", t.alias("_t"), TA.tokens_col(t).alias("_toks"))
         .withColumn("_ltoks", TA.lower_tokens_from_tokens("_toks"))
     )
@@ -584,12 +575,12 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The shape every 100 TB curation job takes: each stage is one of the
     already-verified operators, composed in a single plan."""
-    d = _spread(_docs(spark, sf_dir))
+    d = spread(_docs(spark, sf_dir))
     surv = DD.exact_dedup_groups(d).select(F.col("survivor_id").alias("doc_id"))
     kept = d.join(surv, "doc_id")
     # tokens once below a spread exchange, features above it (CollapseProject
     # re-inlines adjacent projections — see q_text_quality)
-    toked = _spread(
+    toked = spread(
         kept.select("doc_id", "source", TA.tokens_col("text").alias("_toks"))
         .withColumn("_ltoks", TA.lower_tokens_from_tokens("_toks"))
     )
@@ -617,14 +608,14 @@ def q_crawl_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXTRACTED text → per-(source, lang) rollup. The shape of a production
     crawl-to-training-data job; every stage is an already-verified operator
     composed without materialization boundaries."""
-    uni = _spread(_url_universe(spark, sf_dir))
+    uni = spread(_url_universe(spark, sf_dir))
     html = F.concat(
         F.lit("<html><body><h1>Doc "), F.col("doc_id").cast("string"),
         F.lit("</h1><p>"), F.col("text"), F.lit("</p></body></html>"),
     )
     extracted = uni.select("doc_id", "source", html_to_text_udf(html).alias("etext"))
     # tokenize below a spread exchange, features above (see q_text_quality)
-    toked = _spread(
+    toked = spread(
         extracted.select("source", "etext", TA.tokens_col("etext").alias("_toks"))
         .withColumn("_ltoks", TA.lower_tokens_from_tokens("_toks"))
     )
@@ -892,7 +883,7 @@ def q_sitemap_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     def gz_udf(xml: pd.Series) -> pd.Series:
         return xml.map(lambda s: gzip.compress(s.encode(), mtime=0))
 
-    docs = _spread(_docs(spark, sf_dir))
+    docs = spread(_docs(spark, sf_dir))
     xml = F.concat(
         F.lit("<urlset><url><loc>https://"), F.col("source"),
         F.lit(".example.com/docs/"), F.col("doc_id").cast("string"),
@@ -1042,7 +1033,6 @@ def q_handler_enqueue(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatches."""
     import pandas as pd
 
-    from crawlee_spark.functions.keying import normalize_url_udf, request_id_col
     from crawlee_spark.operators.enqueue import EnqueueOptions, gate_candidates
     from crawlee_spark.operators.handlers import RequestHandler, apply_request_handlers
 
@@ -1099,7 +1089,7 @@ def q_handler_enqueue(spark: SparkSession, sf_dir: str) -> DataFrame:
     accepted, _ = gate_candidates(
         cand, EnqueueOptions(strategy="same-hostname", label="fallback")
     )
-    uk = F.coalesce(normalize_url_udf("url"), F.col("url"))
+    uk = unique_key_col("url")
     return (
         accepted.select(uk.alias("unique_key"), "label", "doc_id")
         .groupBy("unique_key", "label")
@@ -1263,7 +1253,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawlee_spark.functions.text_analysis import token_count_col
     from crawlee_spark.operators.curation import pack_sequences
 
-    d = _spread(_docs(spark, sf_dir)).select(
+    d = spread(_docs(spark, sf_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         token_count_col("text").alias("n_tokens"),
     )
@@ -1348,7 +1338,7 @@ def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``@`` characters in the corpus text)."""
     from crawlee_spark.functions.pii import pii_count_cols, redact_pii_col
 
-    d = _spread(_docs(spark, sf_dir))
+    d = spread(_docs(spark, sf_dir))
     ds = F.col("doc_id").cast("string")
     clean = F.regexp_replace(F.col("text"), "[0-9]", "")
     raw = F.concat(

@@ -115,11 +115,16 @@ def request_id_py(unique_key: str) -> str:
 # normalized form, i.e. ``normalize_url_py(u, kf) == u`` for any kf —
 # lowercase scheme, lowercase host[:port] netloc (conservative charset: no
 # userinfo/brackets — those fall through to the full parser), no query, no
-# fragment, path absent or not ending in ``/``. The steady-state crawl
+# fragment, path absent or not ending in ``/``. Whitespace the parser would
+# change stays off the fast path: no tab/CR/LF anywhere (urlsplit deletes
+# them), no trailing whitespace (``strip``), and ``\Z`` rather than ``$``
+# (``$`` also matches before a final newline). The steady-state crawl
 # frontier is dominated by such URLs (they are the kernel's own output
 # shape), so the per-row urlsplit + rebuild is skipped for them; property
 # test pins fast-path ≡ full-parser agreement.
-_NORMALIZED_URL_RE = re.compile(r"^[a-z][a-z0-9+.-]*://[a-z0-9.:-]+(?:/[^?#]*[^/?#])?$")
+_NORMALIZED_URL_RE = re.compile(
+    r"^[a-z][a-z0-9+.-]*://[a-z0-9.:-]+(?:/[^?#\t\r\n]*[^/?#\s])?\Z"
+)
 
 
 # ---------------------------------------------------------------------------
@@ -127,32 +132,25 @@ _NORMALIZED_URL_RE = re.compile(r"^[a-z][a-z0-9+.-]*://[a-z0-9.:-]+(?:/[^?#]*[^/
 # ---------------------------------------------------------------------------
 
 
-def _normalize_batch(urls: pd.Series, keep_fragment: bool) -> pd.Series:
-    """Vectorized normalize: regex fast path (identity) + full parser for
-    the rest. One list comprehension over the raw values — pandas ``.map``
-    with a lambda pays a per-row Series overhead this avoids."""
+def _unique_keys(urls: pd.Series) -> list:
+    """``normalizeUrl(url) || url`` per row (request.ts:426): the regex fast
+    path returns already-normalized urls as they are, the full parser runs
+    on the rest, and null stays null. One list comprehension over the raw
+    values — pandas ``.map`` with a lambda pays a per-row Series overhead
+    this avoids."""
     match = _NORMALIZED_URL_RE.match
     norm = normalize_url_py
-    return pd.Series(
-        [
-            u
-            if (u is not None and isinstance(u, str) and match(u) is not None)
-            else norm(u, keep_fragment)
-            for u in urls
-        ],
-        index=urls.index,
-        dtype=object,
-    )
+    return [
+        u
+        if (isinstance(u, str) and match(u) is not None)
+        else ((norm(u, False) or u) if u is not None else None)
+        for u in urls
+    ]
 
 
 @pandas_udf(StringType())
-def normalize_url_udf(urls: pd.Series) -> pd.Series:
-    return _normalize_batch(urls, False)
-
-
-@pandas_udf(StringType())
-def normalize_url_keep_fragment_udf(urls: pd.Series) -> pd.Series:
-    return _normalize_batch(urls, True)
+def _normalize_or_raw_udf(urls: pd.Series) -> pd.Series:
+    return pd.Series(_unique_keys(urls), index=urls.index, dtype=object)
 
 
 _KEYING_SCHEMA = StructType(
@@ -169,45 +167,9 @@ def keying_udf(urls: pd.Series) -> pd.DataFrame:
     local JVM this also sidesteps the allocation-bound sha/base64 expression
     path; on a cluster either form works — the expression variant
     (``request_id_col``) stays available for pure-SQL plans."""
-
-    match = _NORMALIZED_URL_RE.match
-    norm = normalize_url_py
-    sha = hashlib.sha256
-    b64 = base64.b64encode
-    uks: list = []
-    rids: list = []
-    for u in urls:
-        if isinstance(u, str) and match(u) is not None:
-            uk = u  # already normalized (fast path; property-test pinned)
-        else:
-            uk = norm(u, False)
-            if uk is None:
-                uk = u
-        if uk is None:
-            uks.append(None)
-            rids.append(None)
-            continue
-        uks.append(uk)
-        rids.append(
-            b64(sha(uk.encode("utf-8")).digest()).translate(None, b"+/=")[:15].decode("ascii")
-        )
+    uks = _unique_keys(urls)
+    rids = [None if uk is None else request_id_py(uk) for uk in uks]
     return pd.DataFrame({"unique_key": uks, "request_id": rids}, index=urls.index)
-
-
-@pandas_udf(StringType())
-def _normalize_or_raw_udf(urls: pd.Series) -> pd.Series:
-    match = _NORMALIZED_URL_RE.match
-    norm = normalize_url_py
-    return pd.Series(
-        [
-            u
-            if (isinstance(u, str) and match(u) is not None)
-            else ((norm(u, False) or u) if u is not None else None)
-            for u in urls
-        ],
-        index=urls.index,
-        dtype=object,
-    )
 
 
 def unique_key_col(

@@ -135,18 +135,6 @@ def get_domain_py(hostname: str | None) -> str | None:
     return ".".join(labels[-(ps + 1) :])
 
 
-def public_suffix_py(hostname: str | None) -> str | None:
-    """The prevailing public suffix itself (``github.io`` for
-    ``foo.github.io``); None for IPs/invalid hosts."""
-    if not hostname:
-        return None
-    h = hostname.strip().lower().rstrip(".")
-    if not h or ":" in h or _IPV4_RE.match(h):
-        return None
-    labels = h.split(".")
-    if "" in labels:
-        return None
-    return ".".join(labels[-public_suffix_len(labels) :])
 
 
 @pandas_udf(StringType())

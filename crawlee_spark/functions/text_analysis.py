@@ -15,18 +15,29 @@ Operators:
 - ``bpe_ish_token_count_col`` — a BPE-like pre-tokenizer count (letter runs,
   digit runs, single punctuation marks), the standard proxy for LLM token
   budgeting when no vocab is shipped.
-- ``quality_*`` — length / punctuation-ratio / stopword-ratio features and a
-  composite quality score (the usual C4/Gopher-style filters).
-- ``lang_scores_col`` / ``lang_id_col`` — marker-token language heuristic.
-- ``doc_fingerprint_col`` — polynomial rolling hash over the token stream
-  (order-sensitive: reordered documents get different fingerprints,
+- ``punct_count_col``, ``stopword_count_from_lower_tokens``,
+  ``mean_token_len_e3_from_tokens`` and ``quality_score_from_parts`` —
+  punctuation / stopword / token-length features and a composite quality
+  score (the usual C4/Gopher-style filters).
+- ``lang_scores_from_lower_tokens`` / ``lang_id_from_lower_tokens`` —
+  marker-token language heuristic.
+- ``doc_fingerprint_from_tokens`` — polynomial rolling hash over the token
+  stream (order-sensitive: reordered documents get different fingerprints,
   whitespace-only edits do not).
+- ``ngram_vocab``, ``domain_mixture_weights`` and
+  ``gopher_repetition_signals`` — corpus-level passes.
+
+The per-document features take MATERIALIZED token-array columns (tokenized
+below a spread exchange), never an inline ``tokens_col(text)``: an inline
+tokenizer re-splits the text once per reference.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from crawlee_spark.operators.sizing import spread
 
 # ---------------------------------------------------------------------------
 # tokenization
@@ -68,10 +79,6 @@ def bpe_ish_token_count_col(text: Column | str) -> Column:
 STOPWORDS = ("the", "a", "an", "of", "to", "in", "and", "is", "it", "that")
 
 
-def n_chars_col(text: Column | str) -> Column:
-    return F.length(_c(text)).cast("long")
-
-
 def punct_count_col(text: Column | str) -> Column:
     """Count of punctuation characters (non-alnum, non-space)."""
     return F.coalesce(
@@ -89,12 +96,6 @@ def stopword_count_from_lower_tokens(ltoks: Column | str) -> Column:
     return F.size(F.filter(_c(ltoks), lambda t: t.isin(*STOPWORDS))).cast("long")
 
 
-def stopword_count_col(text: Column | str) -> Column:
-    return stopword_count_from_lower_tokens(
-        F.transform(tokens_col(text), lambda t: F.lower(t))
-    )
-
-
 def mean_token_len_e3_from_tokens(toks: Column | str) -> Column:
     """Mean token length ×1000 from a MATERIALIZED token-array column.
 
@@ -104,14 +105,6 @@ def mean_token_len_e3_from_tokens(toks: Column | str) -> Column:
     t = _c(toks)
     total = F.aggregate(t, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x))
     return F.when(F.size(t) > 0, F.floor(total * 1000 / F.size(t))).otherwise(F.lit(0)).cast("long")
-
-
-def mean_token_len_e3_col(text: Column | str) -> Column:
-    """Mean token length ×1000, floored to integer (portable fixed-point).
-
-    Convenience form — re-tokenizes per reference; bulk paths materialize
-    the token array and use ``mean_token_len_e3_from_tokens``."""
-    return mean_token_len_e3_from_tokens(tokens_col(text))
 
 
 def quality_score_from_parts(
@@ -135,16 +128,6 @@ def quality_score_from_parts(
     stop_pts = F.floor(F.least(stop_pct, F.lit(10)) * 30 / 10)
     mtl_pts = F.when((mtl >= 3000) & (mtl <= 10000), F.lit(30)).otherwise(F.lit(0))
     return (len_pts + stop_pts + mtl_pts).cast("long")
-
-
-def quality_score_col(text: Column | str) -> Column:
-    """Composite quality score — convenience form that re-derives every
-    feature from ``text`` inline (each reference re-tokenizes; ~7 splits
-    per row). Bulk paths materialize (tokens, stop count, mean length) as
-    columns and call ``quality_score_from_parts``."""
-    return quality_score_from_parts(
-        token_count_col(text), stopword_count_col(text), mean_token_len_e3_col(text)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -177,13 +160,6 @@ def lang_scores_from_lower_tokens(ltoks: Column | str) -> Column:
     return F.array(*entries)
 
 
-def lang_scores_col(text: Column | str) -> Column:
-    """Map language → marker hit count (over lowercased whitespace tokens)."""
-    return lang_scores_from_lower_tokens(
-        F.transform(tokens_col(text), lambda t: F.lower(t))
-    )
-
-
 def lang_id_from_lower_tokens(ltoks: Column | str) -> Column:
     """Predicted language code from a MATERIALIZED lowercased token-array
     column ('und' when no marker matches)."""
@@ -193,15 +169,6 @@ def lang_id_from_lower_tokens(ltoks: Column | str) -> Column:
         lambda acc, s: F.when(s["hits"] > acc["hits"], s).otherwise(acc),
     )
     return best["lang"]
-
-
-def lang_id_col(text: Column | str) -> Column:
-    """Predicted language code ('und' when no marker matches). Convenience
-    form — bulk paths materialize the lowercased token array and use
-    ``lang_id_from_lower_tokens``."""
-    return lang_id_from_lower_tokens(
-        F.transform(tokens_col(text), lambda t: F.lower(t))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -221,19 +188,14 @@ def _token_value(t: Column) -> Column:
 
 
 def doc_fingerprint_from_tokens(toks: Column | str) -> Column:
-    """Polynomial rolling hash from a materialized token-array column."""
+    """Polynomial rolling hash from a materialized token-array column:
+    ``h = (h * 1000003 + value(token)) mod (2^31-1)``, h₀ = 0."""
     vals = F.transform(_c(toks), _token_value)
     return F.aggregate(
         vals,
         F.lit(0).cast("long"),
         lambda acc, v: F.pmod(acc * _FP_MULT + v, F.lit(_FP_MOD)),
     )
-
-
-def doc_fingerprint_col(text: Column | str) -> Column:
-    """Polynomial rolling hash over whitespace tokens:
-    ``h = (h * 1000003 + value(token)) mod (2^31-1)``, h₀ = 0."""
-    return doc_fingerprint_from_tokens(tokens_col(text))
 
 
 def ngrams_from_tokens(toks: Column, n: int) -> Column:
@@ -255,13 +217,6 @@ def ngrams_from_tokens(toks: Column, n: int) -> Column:
     )
 
 
-def ngram_cols(text: Column | str, n: int = 2) -> Column:
-    """Inline-convenience form of ``ngrams_from_tokens`` for SHORT texts —
-    the embedded tokenizer re-runs per gram (see ngrams_from_tokens); bulk
-    paths (``ngram_vocab``) materialize the token array first."""
-    return ngrams_from_tokens(tokens_col(text), n)
-
-
 def ngram_vocab(df, text_col: str = "text", *, n: int = 2, top_k: int = 100):
     """Corpus-wide top-k word n-grams — the vocabulary-building pass of a
     training-data pipeline.
@@ -275,8 +230,7 @@ def ngram_vocab(df, text_col: str = "text", *, n: int = 2, top_k: int = 100):
     ngram).limit(k)`` which Spark executes as TakeOrdered (per-partition
     top-k + driver merge, never a global sort). The tie-break on the gram
     string makes the k boundary deterministic."""
-    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    toks = spread.select(tokens_col(F.col(text_col)).alias("_toks"))
+    toks = spread(df).select(tokens_col(F.col(text_col)).alias("_toks"))
     grams = toks.select(F.explode(ngrams_from_tokens(F.col("_toks"), n)).alias("ngram"))
     return (
         grams.groupBy("ngram")
@@ -392,8 +346,7 @@ def gopher_repetition_signals(
     # repo's repartition-before-heavy-math rule); the repartition Exchange
     # is additionally REUSED by both join branches below, so the scan +
     # split + tokenize run once instead of once per branch
-    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    base = spread.select(
+    base = spread(df).select(
         F.col(id_col),
         F.col(text_col).alias("_t"),
         F.split(F.col(text_col), "\n").alias("_lines"),

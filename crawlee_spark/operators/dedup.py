@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from crawlee_spark.functions.text_analysis import tokens_col
+from crawlee_spark.operators.sizing import spread
 
 # ---------------------------------------------------------------------------
 # shingling
@@ -232,8 +233,7 @@ def with_minhash_bands(
         # the input first — small corpora arrive as one parquet split, and
         # the signature math (one md5 + num_perm affine mins per shingle) is
         # the expensive part worth all cores.
-        spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-        sh_frame = spread.select(
+        sh_frame = spread(df).select(
             F.col(id_col).alias("_id"), tokens_col(F.col(text_col)).alias("_w")
         ).select("_id", shingles_from_tokens("_w", n).alias("_sh"))
     hashed = sh_frame.select("_id", minhash_hashes_col(F.col("_sh")).alias("_h"))
@@ -279,9 +279,8 @@ def minhash_lsh_pairs(
     # the self-joins re-run the whole tokenize→shingle (and the banding
     # re-runs the 12 md5 passes) per branch, which measured ~2× the whole
     # operator's cost at sf0.1
-    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     sh = (
-        spread.select(F.col(id_col).alias("_id"), tokens_col(F.col(text_col)).alias("_w"))
+        spread(df).select(F.col(id_col).alias("_id"), tokens_col(F.col(text_col)).alias("_w"))
         .select("_id", shingles_from_tokens("_w", n).alias("_sh"))
         .localCheckpoint(eager=True)
     )
@@ -344,9 +343,8 @@ def with_simhash(
     (an array-fold formulation allocates a 64-slot array per token and is
     ~20× slower)."""
     other = [c for c in df.columns]
-    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     toks = F.array_distinct(tokens_col(F.col(text_col)))
-    tok = spread.withColumn("_ntok", F.size(toks)).withColumn("_t", F.explode_outer(toks))
+    tok = spread(df).withColumn("_ntok", F.size(toks)).withColumn("_t", F.explode_outer(toks))
     digest = F.md5(F.col("_t"))
     # 4 × 16-bit words of the token hash, one conv each
     for w in range(4):
@@ -471,8 +469,7 @@ def _span_hash_frame(
     space-joined tokens. Tokens materialize as a projected column first
     (an inline tokenizer would re-run per span — O(len²)/doc) and
     single-split inputs re-spread before the per-row hashing."""
-    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    tok_frame = spread.select(
+    tok_frame = spread(df).select(
         F.col(id_col).alias(out_id), tokens_col(F.col(text_col)).alias("_toks")
     )
     toks = F.col("_toks")
@@ -662,8 +659,7 @@ def build_lsh_index(
     dropped AT BUILD TIME, once, instead of on every incremental batch.
     At scale, write the result bucketed/partitioned by ``band`` +
     ``band_key`` prefix so the incremental join is co-located."""
-    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    sh = spread.select(
+    sh = spread(df).select(
         F.col(id_col).alias("_id"), tokens_col(F.col(text_col)).alias("_w")
     ).select("_id", shingles_from_tokens("_w", n).alias("_sh"))
     hashed = sh.select("_id", minhash_hashes_col(F.col("_sh")).alias("_h"))

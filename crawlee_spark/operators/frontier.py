@@ -48,9 +48,9 @@ from pyspark.sql import types as T
 from crawlee_spark.functions.keying import (
     host_col,
     keying_udf,
-    normalize_url_udf,
     registrable_domain_col,
     request_id_col,
+    unique_key_col,
 )
 
 FRONTIER_SCHEMA = T.StructType(
@@ -109,7 +109,7 @@ def candidates_to_requests(
     cols = df.columns
     out = df
     if "unique_key" not in cols:
-        out = out.withColumn("unique_key", F.coalesce(normalize_url_udf("url"), F.col("url")))
+        out = out.withColumn("unique_key", unique_key_col("url"))
     if "request_id" not in cols:
         out = out.withColumn("request_id", request_id_col("unique_key"))
     out = (

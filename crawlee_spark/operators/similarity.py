@@ -30,21 +30,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from crawlee_spark.operators.sizing import spread
+
 
 def _c(col):
     return F.col(col) if isinstance(col, str) else col
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session's default parallelism.
-
-    The corpus side of every scorer does heavy per-row math (interpreted
-    higher-order-function folds); a small single-row-group parquet input
-    otherwise pins that whole pass to ONE task regardless of split planning
-    (a parquet reader only materializes row groups whose midpoint falls in
-    its split). The shuffled bytes are tiny next to the per-row compute —
-    the repo's repartition-before-heavy-math rule."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def dot_col(a, b):
@@ -95,7 +85,7 @@ def cosine_topk(
     q = queries.select(
         F.col(query_id_col).alias("_qid"), F.col(vec_col).alias("_qvec")
     ).withColumn("_qn", norm_sq_col("_qvec"))
-    c = _spread(
+    c = spread(
         corpus.select(F.col(id_col).alias(id_col), F.col(vec_col).alias("_cvec"))
     ).withColumn("_cn", norm_sq_col("_cvec"))
     score = F.when(
@@ -201,7 +191,7 @@ def lsh_ann_topk(
         vec_col="_qvec", dim=dim, nbits=nbits, out_col="bucket",
     ).withColumn("_qn", norm_sq_col("_qvec"))
     c = with_lsh_buckets(
-        _spread(corpus.select(F.col(id_col), F.col(vec_col).alias("_cvec"))),
+        spread(corpus.select(F.col(id_col), F.col(vec_col).alias("_cvec"))),
         vec_col="_cvec", dim=dim, nbits=nbits, out_col="bucket",
     ).withColumn("_cn", norm_sq_col("_cvec"))
     c = lsh_bucket_guard(c, max_bucket)
@@ -296,7 +286,7 @@ def kmeans_fit(
         [float(x) for x in r[vec_col]]
         for r in corpus.orderBy(id_col).limit(k).collect()
     ]
-    src = _spread(corpus.select(F.col(vec_col).alias("_v")))
+    src = spread(corpus.select(F.col(vec_col).alias("_v")))
     for _ in range(iters):
         assigned = with_centroid_scores(src, "_v", cents, "_ks").withColumn(
             "_cell", _argmax_excluding(len(cents), "_ks", [])
@@ -348,7 +338,7 @@ def ivf_topk(
         corpus, k=n_centroids, iters=train_iters, id_col=id_col, vec_col=vec_col
     )
     c = with_centroid_scores(
-        _spread(corpus.select(id_col, F.col(vec_col).alias("_cvec"))), "_cvec", cents, "_cs"
+        spread(corpus.select(id_col, F.col(vec_col).alias("_cvec"))), "_cvec", cents, "_cs"
     )
     c = c.withColumn("ivf_cell", _argmax_excluding(n_centroids, "_cs", [])).drop(
         *[f"_cs{i}" for i in range(n_centroids)]
@@ -411,7 +401,7 @@ def ivf_write_index(
 
     cents = kmeans_fit(corpus, k=n_centroids, iters=train_iters, id_col=id_col, vec_col=vec_col)
     assigned = with_centroid_scores(
-        _spread(corpus.select(id_col, F.col(vec_col).alias("_v"))), "_v", cents, "_cs"
+        spread(corpus.select(id_col, F.col(vec_col).alias("_v"))), "_v", cents, "_cs"
     )
     assigned = assigned.withColumn("ivf_cell", _argmax_excluding(n_centroids, "_cs", [])).drop(
         *[f"_cs{i}" for i in range(n_centroids)]
@@ -505,7 +495,7 @@ def embedding_neardup_pairs(
 
     Output: (id_a, id_b, score_e6)."""
     bucketed = with_lsh_buckets(
-        _spread(df.select(id_col, vec_col)), vec_col=vec_col, dim=dim, nbits=nbits
+        spread(df.select(id_col, vec_col)), vec_col=vec_col, dim=dim, nbits=nbits
     ).withColumn("_n", norm_sq_col(vec_col))
     bucketed = lsh_bucket_guard(bucketed, max_bucket)
     a = bucketed.select(
@@ -591,7 +581,7 @@ def quantized_topk(
         vec_col=vec_col,
         bits=bits,
     ).select("_qid", F.col("qvec").alias("_qq"))
-    c = quantize_embeddings(_spread(corpus), vec_col=vec_col, bits=bits).select(
+    c = quantize_embeddings(spread(corpus), vec_col=vec_col, bits=bits).select(
         id_col, F.col("qvec").alias("_qc")
     )
     dot = F.aggregate(

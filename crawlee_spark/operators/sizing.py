@@ -1,5 +1,5 @@
-"""Broadcast sizing: estimate frame bytes so broadcast guards gate on DATA
-size, not row count.
+"""Frame sizing: the scan spread before heavy per-row work, and byte
+estimates so broadcast guards gate on DATA size, not row count.
 
 A row-count guard alone is wrong on both ends: 4 M rows of 15-byte
 request_ids is a comfortable ~60 MB broadcast, while 4 M rows of 2 KB
@@ -63,3 +63,16 @@ def avg_row_bytes(df: DataFrame, sample_rows: int = 1024) -> float:
         .collect()[0]
     )
     return float(row["w"] or 0.0)
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to the session's default parallelism before
+    heavy per-row work (Python UDFs, hash/regex chains, higher-order-function
+    folds). Small corpora arrive as single-row-group parquet files, and a
+    parquet reader only materializes row groups whose midpoint falls in its
+    split, so without this the whole per-row pass runs in ONE task however
+    many splits the scan planner makes. The shuffled bytes are tiny next to
+    the per-row compute. The Exchange is also a projection barrier: columns
+    selected above it stay materialized (CollapseProject cannot re-inline
+    them), and a plan that reads the spread frame twice reuses it."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

@@ -55,14 +55,12 @@ class RequestList:
         return bool((self.kv.get_value(self._key) or {}).get("finished"))
 
     def _ranked(self, requests: DataFrame, order_col: str | None) -> DataFrame:
-        from crawlee_spark.functions.keying import normalize_url_udf
+        from crawlee_spark.functions.keying import unique_key_col
         from crawlee_spark.operators.scheduler import global_row_number
 
         df = requests
         if "unique_key" not in df.columns:
-            df = df.withColumn(
-                "unique_key", F.coalesce(normalize_url_udf("url"), F.col("url"))
-            )
+            df = df.withColumn("unique_key", unique_key_col("url"))
         oc = order_col or "url"
         ranks = global_row_number(df.select(oc).distinct(), oc, col_name="_rl_rank")
         # 0-based list position; order column must be unique (list order is

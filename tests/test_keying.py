@@ -113,14 +113,11 @@ def test_registrable_domain_full_psl():
     assert registrable_domain_py("co.uk") is None
 
 
-def test_fast_path_regex_is_identity_on_normalized_urls():
-    """The keying kernel's fast-path regex may match ONLY urls that are
-    fixed points of normalize_url_py (for both keep_fragment values) — the
-    r6 optimization that skips urlsplit for already-normalized frontier
-    rows. Structured sweep + targeted tricky cases."""
+def _sweep_urls() -> set:
+    """Structured URL sweep + targeted tricky cases for the keying fast path:
+    scheme/host/path/tail products, and whitespace or control characters
+    trailing a URL, inside its path, or leading it."""
     import itertools
-
-    from crawlee_spark.functions.keying import _NORMALIZED_URL_RE, normalize_url_py
 
     schemes = ["http", "https", "HTTP", "a+b-c.d", "h", ""]
     hosts = [
@@ -131,10 +128,44 @@ def test_fast_path_regex_is_identity_on_normalized_urls():
     tails = ["", "?b=2&a=1", "?utm_source=x", "#frag", "?a=1#f", "#"]
     urls = {f"{s}://{h}{p}{t}" for s, h, p, t in itertools.product(schemes, hosts, paths, tails)}
     urls |= {" https://a.com ", "https://a.com/x/", "mailto:x@y", "", "https://", "https:///p"}
+    for ch in (" ", "\t", "\r", "\n", "\x00", "\x0b", "\x1f", "\xa0"):
+        urls |= {f"http://a.com/x{ch}", f"http://a.com{ch}", f"http://a.com/a{ch}b", f"{ch}http://a.com/x"}
+    return urls
+
+
+def test_fast_path_regex_is_identity_on_normalized_urls():
+    """The keying kernel's fast-path regex may match ONLY urls that are
+    fixed points of normalize_url_py (for both keep_fragment values) — the
+    r6 optimization that skips urlsplit for already-normalized frontier
+    rows."""
+    from crawlee_spark.functions.keying import _NORMALIZED_URL_RE
+
     n_fast = 0
-    for u in urls:
+    for u in _sweep_urls():
         if _NORMALIZED_URL_RE.match(u):
             n_fast += 1
             for kf in (False, True):
                 assert normalize_url_py(u, kf) == u, (u, kf)
     assert n_fast > 0  # the sweep must actually exercise the fast path
+
+
+def test_spark_keying_matches_python_kernels(spark):
+    """Both Spark keying forms — the fused ``keying_udf`` and
+    ``unique_key_col`` + ``request_id_col`` — equal ``compute_unique_key_py``
+    and ``request_id_py`` row for row, nulls and unparseable urls included."""
+    from crawlee_spark.functions.keying import keying_udf, request_id_col, unique_key_col
+
+    urls = sorted(_sweep_urls()) + [None]  # the sweep holds "mailto:x@y" and ""
+    df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)], "i int, url string")
+    uk = unique_key_col("url")
+    rows = (
+        df.select("i", keying_udf("url").alias("k"), uk.alias("uk"), request_id_col(uk).alias("rid"))
+        .orderBy("i")
+        .collect()
+    )
+    assert len(rows) == len(urls)
+    for r, u in zip(rows, urls):
+        want_uk = compute_unique_key_py(u)
+        want_rid = None if want_uk is None else request_id_py(want_uk)
+        assert (r["k"]["unique_key"], r["k"]["request_id"]) == (want_uk, want_rid), repr(u)
+        assert (r["uk"], r["rid"]) == (want_uk, want_rid), repr(u)

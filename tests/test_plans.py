@@ -279,3 +279,25 @@ def test_fetch_join_never_shuffles_pages(spark, tmp_path_factory):
     a = sorted(map(tuple, fetch_join(claimed2, pages).collect()))
     b = sorted(map(tuple, fetch_join(claimed2, pages, prune_pages=False).collect()))
     assert a == b and len(a) == 6
+
+
+def test_spread_round_robins_a_single_file_scan(spark, tmp_path_factory):
+    """sizing.spread puts a round-robin Exchange over a one-file parquet scan
+    (single-row-group inputs otherwise run their per-row pass in one task),
+    and gopher_repetition_signals reuses that Exchange for both of its join
+    branches, so the scan + split + tokenize run once."""
+    from crawlee_spark.functions.text_analysis import gopher_repetition_signals
+    from crawlee_spark.operators.sizing import spread
+
+    d = str(tmp_path_factory.mktemp("plans-spread")) + "/docs"
+    spark.createDataFrame(
+        [(i, f"line {i % 3}\nword{i} word{i % 5} word{i}") for i in range(40)],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(d)
+    docs = spark.read.parquet(d)
+
+    assert "RoundRobinPartitioning" in explain_str(spread(docs), "simple")
+    out = gopher_repetition_signals(docs, top_ns=(2,), dup_ns=(5,))
+    assert len(out.collect()) == 40  # collect() finalizes out's OWN adaptive plan
+    executed = out._jdf.queryExecution().executedPlan().toString()
+    assert "ReusedExchange" in executed

@@ -11,12 +11,21 @@ ROWS = [
     (3, "der hund und die katze ist nicht da"),
     (4, "one two three"),
     (5, "three two one"),
+    (6, "a  b   c"),
+    (7, "a b c"),
 ]
 
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return spark.createDataFrame(ROWS, "doc_id long, text string")
+    """The documents with their token arrays materialized as columns, the
+    shape the per-document kernels take: ``toks`` (whitespace tokens) and
+    ``ltoks`` (lowercased tokens)."""
+    return (
+        spark.createDataFrame(ROWS, "doc_id long, text string")
+        .withColumn("toks", TA.tokens_col("text"))
+        .withColumn("ltoks", TA.lower_tokens_from_tokens("toks"))
+    )
 
 
 def _one(docs, col, doc_id):
@@ -34,36 +43,40 @@ def test_token_counts(docs):
 
 def test_punct_and_stopwords(docs):
     assert _one(docs, TA.punct_count_col("text"), 1) == 2  # , and !
-    assert _one(docs, TA.stopword_count_col("text"), 1) == 2  # 'the' and 'it'
-    assert _one(docs, TA.stopword_count_col("text"), 2) == 0
+    assert _one(docs, TA.stopword_count_from_lower_tokens("ltoks"), 1) == 2  # 'the' and 'it'
+    assert _one(docs, TA.stopword_count_from_lower_tokens("ltoks"), 2) == 0
 
 
 def test_quality_score_bounds(docs):
-    vals = [r["v"] for r in docs.select(TA.quality_score_col("text").alias("v")).collect()]
+    score = TA.quality_score_from_parts(
+        F.size("toks"),
+        TA.stopword_count_from_lower_tokens("ltoks"),
+        TA.mean_token_len_e3_from_tokens("toks"),
+    )
+    vals = [r["v"] for r in docs.select(score.alias("v")).collect()]
     assert all(0 <= v <= 100 for v in vals)
     # empty doc scores 0
-    assert _one(docs, TA.quality_score_col("text"), 2) == 0
+    assert _one(docs, score, 2) == 0
 
 
 def test_lang_id(docs):
-    assert _one(docs, TA.lang_id_col("text"), 1) == "en"
-    assert _one(docs, TA.lang_id_col("text"), 3) == "de"
-    assert _one(docs, TA.lang_id_col("text"), 2) == "und"
-    assert _one(docs, TA.lang_id_col("text"), 4) == "und"
+    assert _one(docs, TA.lang_id_from_lower_tokens("ltoks"), 1) == "en"
+    assert _one(docs, TA.lang_id_from_lower_tokens("ltoks"), 3) == "de"
+    assert _one(docs, TA.lang_id_from_lower_tokens("ltoks"), 2) == "und"
+    assert _one(docs, TA.lang_id_from_lower_tokens("ltoks"), 4) == "und"
 
 
 def test_fingerprint_order_sensitive(docs):
-    f4 = _one(docs, TA.doc_fingerprint_col("text"), 4)
-    f5 = _one(docs, TA.doc_fingerprint_col("text"), 5)
+    f4 = _one(docs, TA.doc_fingerprint_from_tokens("toks"), 4)
+    f5 = _one(docs, TA.doc_fingerprint_from_tokens("toks"), 5)
     assert f4 != f5  # same tokens, different order
     assert 0 <= f4 < 2147483647
-    assert _one(docs, TA.doc_fingerprint_col("text"), 2) == 0
+    assert _one(docs, TA.doc_fingerprint_from_tokens("toks"), 2) == 0
 
 
-def test_fingerprint_whitespace_invariant(spark):
-    df = spark.createDataFrame([(1, "a  b   c"), (2, "a b c")], "doc_id long, text string")
-    vals = [r["v"] for r in df.select(TA.doc_fingerprint_col("text").alias("v")).collect()]
-    assert vals[0] == vals[1]
+def test_fingerprint_whitespace_invariant(docs):
+    fp = TA.doc_fingerprint_from_tokens("toks")
+    assert _one(docs, fp, 6) == _one(docs, fp, 7)
 
 
 def test_ngram_vocab_counts_and_ties(spark):
