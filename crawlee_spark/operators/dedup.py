@@ -25,8 +25,8 @@ Scale notes (100 TB):
 - LSH pair generation shuffles on (band, band_key); hot buckets (boilerplate
   pages) are bounded by ``max_bucket`` — buckets above it are dropped and
   reported, the standard guard against O(n²) blowup inside one bucket.
-- The verify stage re-joins pair ids back to shingle sets; with AQE on, the
-  join picks broadcast automatically when the candidate set is small.
+- The verify stage re-joins pair ids back to shingle sets, broadcasting the
+  candidate pairs when ``sizing.fits_broadcast`` admits them.
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from crawlee_spark.functions.text_analysis import tokens_col
-from crawlee_spark.operators.sizing import spread
+from crawlee_spark.operators.sizing import fits_broadcast, spread
 
 # ---------------------------------------------------------------------------
 # shingling
@@ -155,13 +155,6 @@ def ngram_jaccard_pairs(
 
 
 MINHASH_PRIME = 4294967311  # smallest prime > 2^32 — the datasketch modulus
-
-# Candidate-pair sets up to this many rows are broadcast into the verify
-# joins (two longs/pair ≈ 16 B ⇒ ≤ ~32 MB build) so the corpus-sized
-# shingle/signature frame is never shuffled for verification; larger sets
-# fall back to shuffle joins, which AQE sizes at runtime.
-BROADCAST_CAND_MAX_PAIRS = 2_000_000
-
 
 def minhash_perm_consts(num_perm: int) -> list:
     """Deterministic (a_i, b_i) affine-permutation constants, derived from
@@ -298,12 +291,14 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .distinct()
         # pin + count once: the candidate set drives BOTH verify joins, and
-        # broadcasting it (when small — the usual case after the bucket
+        # broadcasting it (when it fits — the usual case after the bucket
         # guard) keeps the corpus-sized shingle frame from being shuffled
-        # twice by sort-merge joins. 16 B/pair ⇒ the cap is a ~32 MB build.
+        # twice by sort-merge joins; a larger set falls back to shuffle
+        # joins, which AQE sizes at runtime. Payload: two longs per pair.
         .localCheckpoint(eager=True)
     )
-    cand_j = F.broadcast(cand) if cand.count() <= BROADCAST_CAND_MAX_PAIRS else cand
+    n_cand = cand.count()
+    cand_j = F.broadcast(cand) if fits_broadcast(n_cand, 16 * n_cand) else cand
     verified = (
         cand_j.join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")), "id_a")
         .join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")), "id_b")
@@ -436,7 +431,8 @@ def simhash_pairs(
             .distinct()
             .localCheckpoint(eager=True)  # see minhash_lsh_pairs: broadcast
         )
-        if cand.count() <= BROADCAST_CAND_MAX_PAIRS:
+        n_cand = cand.count()
+        if fits_broadcast(n_cand, 16 * n_cand):
             cand = F.broadcast(cand)
         pairs = cand.join(
             hashed.select(

@@ -57,6 +57,7 @@ from crawlee_spark.operators.scheduler import (
     claim_round,
     global_row_number,
 )
+from crawlee_spark.operators.sizing import fits_broadcast, maybe_broadcast
 from crawlee_spark.operators.stats import OUTCOME_SCHEMA, final_statistics
 
 BLOCKED_STATUS_CODES = (401, 403, 429)  # session_pool/consts.ts:1
@@ -67,6 +68,11 @@ SUPPORTED_MIME = (  # http-crawler.ts:65-66
     "application/xml",
     "application/json",
 )
+# The fetch join prunes the pages scan only when the pages source's files
+# reach this size: below it a full shuffle is cheaper than the
+# distinct + broadcast + semi-join machinery (measured -7% at a 40 MB corpus,
+# while at the 100 TB design point the plain join shuffles the corpus).
+PAGES_PRUNE_MIN_BYTES = 1 << 30
 
 
 def fetch_join(claimed: DataFrame, pages: DataFrame, *, prune_pages: bool = True) -> DataFrame:
@@ -80,36 +86,15 @@ def fetch_join(claimed: DataFrame, pages: DataFrame, *, prune_pages: bool = True
     side of an outer join cannot be the build side.) Instead the claim's
     urls broadcast into a LEFT SEMI join that prunes the pages scan to the
     claimed rows — a map-only pass over the corpus — and the actual left
-    join then runs at claim size on both sides. ``prune_pages=False``
-    falls back to the plain join (a pathologically large claim set whose
-    url list should not broadcast)."""
+    join then runs at claim size on both sides. ``prune_pages=False`` is
+    the plain join; the engine picks it when the pages source is below
+    ``PAGES_PRUNE_MIN_BYTES`` or the claim's urls fail
+    ``sizing.fits_broadcast``."""
     if not prune_pages:
         return claimed.join(pages, claimed["url"] == pages["page_url"], "left").drop("page_url")
     claim_urls = claimed.select(F.col("url").alias("page_url")).distinct()
     relevant = pages.join(F.broadcast(claim_urls), "page_url", "left_semi")
     return claimed.join(relevant, claimed["url"] == relevant["page_url"], "left").drop("page_url")
-
-
-def maybe_broadcast(df: DataFrame, max_rows: int, max_bytes: int | None = None) -> DataFrame:
-    """Broadcast-hint a dimension frame only when it is provably small.
-
-    An unconditional ``F.broadcast`` on the robots table is a scale-killer:
-    at millions of crawled hosts the dim no longer fits executor memory and
-    the broadcast build OOMs. One count (cached by the caller via the
-    returned frame's reuse) decides; above the cap the join falls back to a
-    shuffle join on the join key, which AQE sizes at runtime.
-
-    ``max_bytes`` additionally gates on estimated DATA size (rows × sampled
-    average row width): a row cap alone lets 1 M × 2 KB robots bodies — a
-    2 GB build — slip through as "small"."""
-    from crawlee_spark.operators.sizing import avg_row_bytes
-
-    n = df.limit(max_rows + 1).count()
-    if n > max_rows:
-        return df
-    if max_bytes is not None and n * avg_row_bytes(df) > max_bytes:
-        return df
-    return F.broadcast(df)
 
 
 @dataclass
@@ -193,22 +178,6 @@ class CrawlEngine:
     policy: PolitenessPolicy = field(default_factory=PolitenessPolicy)
     options: CrawlOptions = field(default_factory=CrawlOptions)
     session_policy: "SessionPolicy | None" = None  # enable the session pool (C6)
-    robots_broadcast_max_rows: int = 1_000_000  # above this: shuffle join
-    # byte companion to the row cap: robots bodies are KB-scale, so a row
-    # count alone admits multi-GB builds (1 M x 2 KB). Rows AND bytes gate.
-    robots_broadcast_max_bytes: int = 256 << 20
-    # fetch-join pruning: the claim's url list broadcasts into a semi-join
-    # that prunes the pages scan; above this many claimed rows — or this many
-    # estimated url BYTES (urls average ~60 B but can run far wider) — fall
-    # back to the plain (corpus-shuffling) join rather than a giant broadcast
-    claims_broadcast_max_rows: int = 4_000_000
-    claims_broadcast_max_bytes: int = 128 << 20
-    # None = auto: prune only when the pages source's file footprint exceeds
-    # pages_prune_min_bytes — below that a full shuffle is cheaper than the
-    # distinct+broadcast+semi-join machinery (measured −7% at a 40 MB corpus,
-    # while at the 100 TB design point the plain join shuffles the corpus)
-    prune_pages_fetch: bool | None = None
-    pages_prune_min_bytes: int = 1 << 30
 
     def __post_init__(self):
         from crawlee_spark.operators.handlers import (
@@ -243,13 +212,7 @@ class CrawlEngine:
         self.skipped_dir = os.path.join(self.store.root, "skipped")
         self.sessions_dir = os.path.join(self.store.root, "sessions")
         # size the robots dim ONCE: broadcast only when provably small
-        self._robots = (
-            maybe_broadcast(
-                self.robots, self.robots_broadcast_max_rows, self.robots_broadcast_max_bytes
-            )
-            if self.robots is not None
-            else None
-        )
+        self._robots = maybe_broadcast(self.robots) if self.robots is not None else None
         cols = self.pages.columns
         pages = self.pages
         if "status_code" not in cols:
@@ -274,17 +237,13 @@ class CrawlEngine:
         # size the pages source ONCE (driver metadata only) to pick the
         # fetch-join strategy; sources with no file footprint (synthesized
         # test frames) stay on the plain join
-        self._prune_fetch = self.prune_pages_fetch
-        if self._prune_fetch is None:
-            try:
-                from urllib.parse import urlparse
+        try:
+            from urllib.parse import urlparse
 
-                total = sum(
-                    os.path.getsize(urlparse(f).path) for f in self._pages.inputFiles()
-                )
-            except Exception:
-                total = 0
-            self._prune_fetch = total >= self.pages_prune_min_bytes
+            total = sum(os.path.getsize(urlparse(f).path) for f in self._pages.inputFiles())
+        except Exception:
+            total = 0
+        self._prune_fetch = total >= PAGES_PRUNE_MIN_BYTES
 
     # -- derived frames -------------------------------------------------------
     def results(self) -> DataFrame:
@@ -548,9 +507,7 @@ class CrawlEngine:
     def run_round(self) -> dict:
         """Execute one scheduling round; returns round metrics."""
         round_id = self.store.round + 1
-        frontier = self.store.read()
-
-        claimed = claim_round(frontier, round_id, self.policy)
+        claimed = claim_round(self.store.read(), round_id, self.policy)
         if self.options.max_requests_per_crawl is not None:
             # O(1) manifest counter — not a frontier aggregate per round
             handled = self.store._manifest["handled_total"]
@@ -568,7 +525,7 @@ class CrawlEngine:
             claimed = self._assign_proxies(claimed)
         claimed = claimed.localCheckpoint(eager=True)  # pin the claim set
         # one aggregate gives the claim count AND the exact url byte mass the
-        # fetch-join prune would broadcast (guard on bytes, not just rows)
+        # fetch-join prune would broadcast, for sizing.fits_broadcast
         _cstats = claimed.agg(
             F.count("*").alias("n"),
             F.sum(F.octet_length("url")).alias("url_bytes"),
@@ -586,18 +543,13 @@ class CrawlEngine:
         # by round-number comparison and the rows are re-claimed — no unlock
         # protocol. This is also the round-start commit (the round counter
         # advances here, the outcome delta below completes the round).
-        # Only with merge-on-read: a full snapshot rewrite just to stamp
-        # leases would be the 2 TB-per-round pattern this design removes.
-        round_committed = False
-        if self.store.merge_on_read:
-            leased = (
-                claimed.withColumn("lease_until", F.lit(round_id).cast("long"))
-                .withColumn("state", F.lit(STATE_BEFORE_NAV))
-                .withColumn("round_id", F.lit(round_id))
-                .select(*[f.name for f in FRONTIER_SCHEMA.fields])
-            )
-            self.store.commit_delta(leased, round_increment=True)
-            round_committed = True
+        leased = (
+            claimed.withColumn("lease_until", F.lit(round_id).cast("long"))
+            .withColumn("state", F.lit(STATE_BEFORE_NAV))
+            .withColumn("round_id", F.lit(round_id))
+            .select(*[f.name for f in FRONTIER_SCHEMA.fields])
+        )
+        self.store.commit_delta(leased, round_increment=True)
 
         # ---- fetch = join against pages (left: missing page ⇒ fetch error);
         # the claim urls broadcast-semi-join prunes the corpus scan (see
@@ -605,9 +557,7 @@ class CrawlEngine:
         fetched = fetch_join(
             claimed,
             self._pages,
-            prune_pages=self._prune_fetch
-            and n_claimed <= self.claims_broadcast_max_rows
-            and claim_url_bytes <= self.claims_broadcast_max_bytes,
+            prune_pages=self._prune_fetch and fits_broadcast(n_claimed, claim_url_bytes),
         )
 
         # ---- robots re-check at fetch time (basic-crawler.ts:1627-1639)
@@ -1048,25 +998,12 @@ class CrawlEngine:
         }
 
         # ---- MERGE outcomes back into the frontier + append fresh links.
-        # The touched set is just the claimed rows' new versions + fresh rows;
-        # with merge-on-read that's ALL we write (O(claimed+fresh) per round);
-        # otherwise the untouched remainder is carried by an anti-join union
-        # (never a frontier-wide equality join against the update set).
+        # The touched set is just the claimed rows' new versions + fresh rows,
+        # and that is ALL the outcome delta writes (O(claimed+fresh) per
+        # round); the lease delta already advanced the round counter.
         updated = self._outcome_rows(classified, round_id, r_lo, r_span)
         delta = updated if fresh_rows is None else updated.unionByName(fresh_rows)
-        if self.store.merge_on_read:
-            self.store.commit_delta(
-                delta, round_increment=not round_committed, extra=counter_extra
-            )
-        else:
-            untouched = frontier.join(
-                classified.select("request_id"), "request_id", "left_anti"
-            )
-            self.store.commit(
-                untouched.unionByName(delta),
-                round_increment=not round_committed,
-                extra=counter_extra,
-            )
+        self.store.commit_delta(delta, extra=counter_extra)
 
         return {
             "round": round_id,

@@ -18,17 +18,17 @@ Reference semantics re-expressed set-wise:
 - queue metadata counters (request-queue.ts:596-610) are an aggregation view,
   not stored state.
 
-Storage: parquet snapshot directories + a JSON manifest (atomic rename), one
-snapshot per committed round — the sandbox stand-in for an Iceberg table where
-each round is a MERGE INTO commit and resume reads the last snapshot. The
+Storage: parquet base snapshots and delta directories + a JSON manifest
+(atomic rename) — the sandbox stand-in for an Iceberg table where each round
+is a MERGE INTO commit and resume reads the last committed state. The
 snapshot layout keeps the same two properties the engine needs from Iceberg:
 transactional read-your-writes between rounds, and time-travel for resume.
 
 Scale notes (10^10-row frontier):
 - the frontier is hash-distributed by ``request_id`` (dedup join key), so the
   anti-join is a co-partitioned shuffle; AQE handles skew.
-- per-round writes rewrite only rows that changed in this sandbox backend's
-  snapshot; with Iceberg this becomes merge-on-read deltas + compaction.
+- per-round writes are merge-on-read deltas of the rows the round touched,
+  compacted into a new base snapshot every ``compact_every`` deltas.
 - ``html`` never enters the frontier — scheduling reads only narrow columns
   (Catalyst prunes the parquet scan to the scheduling columns).
 """
@@ -52,6 +52,7 @@ from crawlee_spark.functions.keying import (
     request_id_col,
     unique_key_col,
 )
+from crawlee_spark.operators.sizing import fits_broadcast
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -151,7 +152,17 @@ def candidates_to_requests(
 
 @dataclass
 class FrontierStore:
-    """Snapshot-per-round frontier table with a JSON manifest.
+    """Merge-on-read (MOR) frontier table: a base snapshot, delta files and a
+    JSON manifest.
+
+    Each round commits only the rows it touched (``commit_delta``,
+    O(claimed+fresh)) and reads resolve last-writer-wins; every
+    ``compact_every`` deltas the full-snapshot ``commit`` rewrites the base.
+    At the design point (10^10-row frontier) a full rewrite per round is
+    ~2 TB of writes for a few hundred MB of change. MOR reads and the Bloom
+    probe anti-join against the outstanding delta ids, broadcast when
+    ``sizing.fits_broadcast`` admits the manifest's delta row and id-byte
+    counts.
 
     The manifest carries the driver-side scalars that make runs deterministic
     and resumable: the monotonic ``order_seq`` (replaces Date.now() orderNo),
@@ -162,24 +173,7 @@ class FrontierStore:
     root: str
     num_partitions: int = 32
     bloom_buckets: int | None = None  # enable D7 prefilter with this many buckets
-    # Merge-on-read is the DEFAULT commit path: each round writes only the
-    # rows it touched (O(claimed+fresh)) and reads resolve last-writer-wins;
-    # the full-snapshot commit() remains as the compaction mechanism. At the
-    # design point (10^10-row frontier) a full rewrite per round is ~2 TB of
-    # writes for a few hundred MB of change — merge_on_read=False is only for
-    # tiny tables and the equivalence test.
-    merge_on_read: bool = True
     compact_every: int = 8  # deltas per base rewrite
-    # MOR reads anti-join the base against the outstanding delta ids; the ids
-    # are O(claimed+fresh) so they broadcast. Above this many outstanding
-    # delta rows the read falls back to a shuffled anti-join (pathological —
-    # compact_every bounds outstanding deltas long before this).
-    delta_broadcast_max_rows: int = 4_000_000
-    # byte companion to the row cap: request_ids are ~15 B so 4 M rows is a
-    # comfortable ~60 MB broadcast, but the guard must not assume the width —
-    # delta commits record the exact id byte mass (delta_id_bytes) and reads
-    # gate on rows AND bytes
-    delta_broadcast_max_bytes: int = 128 << 20
     _manifest: dict = field(default_factory=dict, repr=False)
 
     MANIFEST = "manifest.json"
@@ -262,8 +256,7 @@ class FrontierStore:
         )
 
     def _deltas_broadcastable(self) -> bool:
-        rows, id_bytes = self._outstanding_delta_stats()
-        return rows <= self.delta_broadcast_max_rows and id_bytes <= self.delta_broadcast_max_bytes
+        return fits_broadcast(*self._outstanding_delta_stats())
 
     # -- table I/O -----------------------------------------------------------
     def read(self, columns: list[str] | None = None) -> DataFrame:
@@ -278,8 +271,8 @@ class FrontierStore:
         — a map-only scan of the base. The previous shape
         (``groupBy(request_id).max_by(struct(*))`` over base ∪ deltas)
         shuffled the ENTIRE wide frontier on every read: ~2 TB per round at a
-        10^10-row frontier just to read the claim set. If outstanding delta
-        rows exceed ``delta_broadcast_max_rows`` (pathological — compaction
+        10^10-row frontier just to read the claim set. If the outstanding
+        delta ids fail ``sizing.fits_broadcast`` (pathological — compaction
         bounds deltas) the anti-join falls back to a shuffle, still correct.
 
         ``columns`` prunes the merge so monitoring reads (counters,
@@ -431,33 +424,26 @@ class FrontierStore:
         enqueue hot path.
 
         The filters cover the base snapshot only (maintained once per
-        compaction by the carry in ``commit_delta``). Candidates the base
-        filter rules out are still anti-joined against the OUTSTANDING DELTA
-        ids (O(claimed+fresh), broadcast), so the result is exactly
-        ``candidates − frontier`` either way. The previous shape OR-merged
-        every delta's ids into a NEW filter version per round — correct, but
-        it rewrote every bucket's bits each round (~12 GB of filter files per
-        round at the 10^10-row design point). Now the hot path pays one small
-        broadcast anti-join and filter writes amortize to 1/compact_every."""
-        from crawlee_spark.operators.dedup_filters import split_candidates
+        compaction by the carry in ``commit_delta``). Ids are never deleted,
+        so the frontier's ids are the base ids plus the outstanding delta ids:
+        the candidates are first anti-joined against the delta ids
+        (O(claimed+fresh), broadcast when they fit), then ``bloom_anti_join``
+        checks the rest against the base filters, so the result is exactly
+        ``candidates − frontier``. The previous shape OR-merged every
+        delta's ids into a NEW filter version per round — correct, but it
+        rewrote every bucket's bits each round (~12 GB of filter files per
+        round at the 10^10-row design point). Now the hot path pays one
+        small anti-join and filter writes amortize to 1/compact_every."""
+        from crawlee_spark.operators.dedup_filters import bloom_anti_join
 
-        if self._manifest["snapshot"] < 0:
-            # young MOR store, no base yet: the frontier IS the deltas —
-            # the exact anti-join is already delta-sized
-            return deduped.join(frontier.select("request_id"), "request_id", "left_anti")
-        tagged = split_candidates(deduped, self.filters_base(), num_buckets=self.bloom_buckets)
-        fast = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen", "bucket", "_h")
-        checked = (
-            tagged.filter(F.col("maybe_seen"))
-            .drop("maybe_seen", "bucket", "_h")
-            .join(frontier.select("request_id"), "request_id", "left_anti")
-        )
         delta_ids = self._delta_ids()
         if delta_ids is not None:
             if self._deltas_broadcastable():
                 delta_ids = F.broadcast(delta_ids)
-            fast = fast.join(delta_ids, "request_id", "left_anti")
-        return fast.unionByName(checked)
+            deduped = deduped.join(delta_ids, "request_id", "left_anti")
+        return bloom_anti_join(
+            deduped, frontier, self.filters_base(), num_buckets=self.bloom_buckets
+        )
 
     def commit(self, df: DataFrame, *, round_increment: bool = False, extra: dict | None = None) -> int:
         """Write a new snapshot and atomically advance the manifest.
@@ -650,10 +636,9 @@ class FrontierStore:
         # filters cover the BASE snapshot; outstanding MOR delta ids are
         # anti-joined exactly (never a stale "definitely new" for a
         # delta-added id — the one direction the guarantee forbids) — see
-        # ``_bloom_fresh``.
-        if self.bloom_buckets and against is None and (
-            self._manifest["snapshot"] >= 0 or self._manifest.get("deltas")
-        ):
+        # ``_bloom_fresh``. A young store with no base yet has no filters:
+        # its frontier IS the deltas, so the exact anti-join is delta-sized.
+        if self.bloom_buckets and against is None and self._manifest["snapshot"] >= 0:
             fresh = self._bloom_fresh(deduped, frontier)
         else:
             fresh = deduped.join(frontier.select("request_id"), "request_id", "left_anti")

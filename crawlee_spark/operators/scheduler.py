@@ -98,7 +98,7 @@ def per_key_topk(
 # sub-millisecond work and the two-phase machinery (range-sample job +
 # checkpoint + count collect) costs more than it saves; above it the
 # unpartitioned window becomes a real serialization point. Same adaptive
-# pattern as maybe_broadcast: pick the physical strategy from the size.
+# pattern as sizing.fits_broadcast: pick the physical strategy from the size.
 SINGLE_TASK_RANK_MAX_ROWS = 131_072
 
 

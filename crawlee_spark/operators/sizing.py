@@ -1,15 +1,18 @@
-"""Frame sizing: the scan spread before heavy per-row work, and byte
-estimates so broadcast guards gate on DATA size, not row count.
+"""Frame sizing: the scan spread before heavy per-row work, and the one
+broadcast guard.
 
-A row-count guard alone is wrong on both ends: 4 M rows of 15-byte
-request_ids is a comfortable ~60 MB broadcast, while 4 M rows of 2 KB
-robots.txt bodies is an 8 GB build that OOMs the executors. Guards here
-check rows AND estimated bytes (rows x sampled average row width).
+Every size-gated broadcast hint in the engine asks ``fits_broadcast(rows,
+payload_bytes)``: the robots dimension (``maybe_broadcast``), the fetch-join
+claim prune, the frontier's delta-id anti-join and the dedup candidate-pair
+verify joins. A row-count guard alone is wrong on both ends (millions of
+15-byte ids vs millions of KB-wide robots bodies), and a raw payload-byte
+guard is wrong too: a broadcast hash relation costs far more than its
+payload, so the estimate adds a measured per-row overhead.
 
-The width sample is a bounded ``limit(sample_rows)`` aggregate — one tiny
-job, never a full scan — so callers can afford it once per dimension frame
-(engine robots dim) or amortize it into an existing count job (frontier
-delta commits fold the id-width sum into the row-count aggregate).
+Width samples are a bounded ``limit(sample_rows)`` aggregate — one tiny
+job, never a full scan — so callers can afford one per dimension frame, or
+they fold exact byte sums into a count job they already run (frontier delta
+commits, the engine's claim aggregate).
 """
 
 from __future__ import annotations
@@ -18,8 +21,21 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# serialized-width guesses for fixed-width types (broadcast hash tables carry
-# some per-row overhead; these are deliberately on the generous side)
+# One cap for every size-gated broadcast hint, on the ESTIMATED build size.
+BROADCAST_MAX_BYTES = 128 << 20
+# Build bytes per row on top of the payload. Measured as the dataSize metric
+# of BroadcastExchange (get_spark defaults, local[4], AQE off): 2 M
+# (long, long) pairs with hashed keys build 134,217,728 B (67 B/row against
+# 16 B of payload) and 2 M 15-char request_id strings build 268,435,456 B
+# (134 B/row against 15 B). At 200 k rows the same shapes build 16.8 MB and
+# 75.5 MB: allocation is page-rounded, so small builds cost more per row.
+# A 3 GB driver has a different page size and builds the ids in 234.9 MB.
+# 120 B/row keeps payload + overhead at or above the measured size of both
+# shapes at 2 M rows.
+ROW_OVERHEAD = 120
+
+# payload widths of fixed-width types (the hash relation's per-row cost is
+# ROW_OVERHEAD, added by fits_broadcast)
 _FIXED_BYTES = {
     T.BooleanType: 1,
     T.ByteType: 1,
@@ -63,6 +79,29 @@ def avg_row_bytes(df: DataFrame, sample_rows: int = 1024) -> float:
         .collect()[0]
     )
     return float(row["w"] or 0.0)
+
+
+def fits_broadcast(rows: int, payload_bytes: float) -> bool:
+    """True when a build side of ``rows`` rows carrying ``payload_bytes`` of
+    data is small enough to broadcast: ``payload_bytes + rows *
+    ROW_OVERHEAD`` must not exceed ``BROADCAST_MAX_BYTES``."""
+    return payload_bytes + rows * ROW_OVERHEAD <= BROADCAST_MAX_BYTES
+
+
+def maybe_broadcast(df: DataFrame) -> DataFrame:
+    """Broadcast-hint a dimension frame only when ``fits_broadcast`` admits
+    it; otherwise the join falls back to a shuffle join on the join key,
+    which AQE sizes at runtime. An unconditional ``F.broadcast`` on the
+    robots table is a scale-killer: at millions of crawled hosts the build
+    OOMs the executors.
+
+    The count is bounded at the most rows the cap admits with no payload at
+    all, and the width comes from ``avg_row_bytes``'s head sample."""
+    max_rows = BROADCAST_MAX_BYTES // ROW_OVERHEAD
+    n = df.limit(max_rows + 1).count()
+    if n > max_rows or not fits_broadcast(n, n * avg_row_bytes(df)):
+        return df
+    return F.broadcast(df)
 
 
 def spread(df: DataFrame) -> DataFrame:

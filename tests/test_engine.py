@@ -530,11 +530,13 @@ def test_fetch_time_robots_skip_is_skipped_not_failed(spark, tmp_store_dir):
     assert store._manifest["failed_total"] == 0
 
 
-def test_fetch_join_pruning_is_size_adaptive(spark, tmp_store_dir, tmp_path):
+def test_fetch_join_pruning_is_size_adaptive(spark, tmp_store_dir, tmp_path, monkeypatch):
     """The fetch-join picks its physical strategy from the pages source's
     file footprint: tiny corpora keep the plain join (a shuffle is cheaper
     than broadcast machinery), big file-backed corpora prune via the
-    broadcast semi-join; explicit override wins either way."""
+    broadcast semi-join."""
+    import crawlee_spark.operators.engine as engine_mod
+
     pages_dir = str(tmp_path / "pages")
     spark.createDataFrame(
         [("https://a.com/x", b"<p>x</p>", 200, "text/html")],
@@ -545,24 +547,16 @@ def test_fetch_join_pruning_is_size_adaptive(spark, tmp_store_dir, tmp_path):
     e1 = build_engine(spark, tmp_store_dir + "/1", small)
     assert e1._prune_fetch is False  # 1-row parquet: below the byte floor
 
+    monkeypatch.setattr(engine_mod, "PAGES_PRUNE_MIN_BYTES", 1)
     e2 = CrawlEngine(
         spark,
         FrontierStore(spark, tmp_store_dir + "/2", num_partitions=2),
         small,
-        prune_pages_fetch=True,
     )
-    assert e2._prune_fetch is True  # explicit override
-
-    e3 = CrawlEngine(
-        spark,
-        FrontierStore(spark, tmp_store_dir + "/3", num_partitions=2),
-        small,
-        pages_prune_min_bytes=1,
-    )
-    assert e3._prune_fetch is True  # auto flips on once the source is "big"
+    assert e2._prune_fetch is True  # auto flips on once the source is "big"
     # and the pruned engine still crawls correctly end to end
-    e3.run(spark.createDataFrame([("https://a.com/x",)], "url string"))
-    assert e3.results().count() == 1
+    e2.run(spark.createDataFrame([("https://a.com/x",)], "url string"))
+    assert e2.results().count() == 1
 
 
 def test_skip_navigation_requests_bypass_fetch(spark, tmp_store_dir, pages):

@@ -29,7 +29,7 @@ def test_bloom_exact_across_mor_deltas(spark, tmp_store_dir):
     contents (a delta-added id must never pass as definitely-new)."""
     store = FrontierStore(
         spark, tmp_store_dir, num_partitions=4, bloom_buckets=8,
-        merge_on_read=True, compact_every=100,
+        compact_every=100,
     )
     store.add_requests(
         spark.createDataFrame([(f"http://a.com/{i}",) for i in range(40)], "url string")
@@ -73,7 +73,7 @@ def test_bloom_filters_cover_every_frontier_id(spark, tmp_store_dir):
 
     store = FrontierStore(
         spark, tmp_store_dir, num_partitions=4, bloom_buckets=8,
-        merge_on_read=True, compact_every=100,
+        compact_every=100,
     )
     store.add_requests(
         spark.createDataFrame([(f"http://b.com/{i}",) for i in range(25)], "url string")
@@ -98,7 +98,7 @@ def test_compaction_carries_filters_without_rebuild(spark, tmp_store_dir, monkey
 
     store = FrontierStore(
         spark, tmp_store_dir, num_partitions=4, bloom_buckets=8,
-        merge_on_read=True, compact_every=2,
+        compact_every=2,
     )
     store.add_requests(
         spark.createDataFrame([(f"http://a.com/{i}",) for i in range(30)], "url string")

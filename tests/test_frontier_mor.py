@@ -12,10 +12,8 @@ from crawlee_spark.operators.scheduler import PolitenessPolicy
 from crawlee_spark.sources.fixtures import make_pages, make_seeds
 
 
-def crawl(spark, root, mor: bool, rounds: int = 3):
-    store = FrontierStore(
-        spark, root, num_partitions=4, merge_on_read=mor, compact_every=100
-    )
+def crawl(spark, root, rounds: int = 3, compact_every: int = 100):
+    store = FrontierStore(spark, root, num_partitions=4, compact_every=compact_every)
     engine = CrawlEngine(
         spark,
         store,
@@ -38,10 +36,13 @@ def snapshot_of(store):
 
 
 def test_mor_equals_full_rewrite(spark, tmp_store_dir):
-    s_full, _ = crawl(spark, os.path.join(tmp_store_dir, "full"), mor=False)
-    s_mor, _ = crawl(spark, os.path.join(tmp_store_dir, "mor"), mor=True)
+    # reference: compact_every=1 compacts on every delta commit, so every
+    # round's state goes through a full-snapshot FrontierStore.commit
+    s_full, _ = crawl(spark, os.path.join(tmp_store_dir, "full"), compact_every=1)
+    assert s_full._manifest["deltas"] == [] and s_full._manifest["snapshot"] >= 0
+    s_mor, _ = crawl(spark, os.path.join(tmp_store_dir, "mor"))
     assert snapshot_of(s_mor) == snapshot_of(s_full)
-    # MOR actually produced deltas (no base snapshot ever written)
+    # MOR actually produced deltas (still outstanding at compact_every=100)
     assert s_mor._manifest["deltas"], "expected outstanding delta files"
     # each delta touched O(claimed+fresh) rows, not the whole frontier
     touched = [h["rows_touched"] for h in s_mor._manifest["history"] if "delta" in h]
@@ -51,7 +52,7 @@ def test_mor_equals_full_rewrite(spark, tmp_store_dir):
 
 def test_mor_compaction(spark, tmp_store_dir):
     store = FrontierStore(
-        spark, tmp_store_dir, num_partitions=4, merge_on_read=True, compact_every=2
+        spark, tmp_store_dir, num_partitions=4, compact_every=2
     )
     store.add_requests(
         spark.createDataFrame([(f"http://a.com/{i}",) for i in range(10)], "url string")
@@ -68,19 +69,13 @@ def test_mor_compaction(spark, tmp_store_dir):
     assert after == before  # same key set survives compaction
 
 
-def test_mor_is_default(spark, tmp_store_dir):
-    """The scale-correct path is the default: a plain FrontierStore commits
-    deltas, not full snapshots (VERDICT r1 item 2)."""
-    assert FrontierStore(spark, tmp_store_dir, num_partitions=2).merge_on_read
-
-
 def test_lease_delta_committed_mid_round(spark, tmp_store_dir):
     """O5: the claimed set is committed as a mid-round delta with
     lease_until = round and state BEFORE_NAV, before any outcome exists —
     the live analog of listAndLockHead's lock (request-queue.ts:228-298)."""
     from crawlee_spark.operators.frontier import STATE_BEFORE_NAV
 
-    store, engine = crawl(spark, tmp_store_dir, mor=True, rounds=1)
+    store, engine = crawl(spark, tmp_store_dir, rounds=1)
     # delta 0 is the round-1 lease stamp; delta 1 the outcomes
     lease = spark.read.parquet(store._delta_dir(0))
     rows = lease.collect()
@@ -95,7 +90,7 @@ def test_lease_blocks_same_round_reclaim(spark, tmp_store_dir):
     the NEXT round sees the (crashed) lease as expired and re-claims."""
     from crawlee_spark.operators.scheduler import eligible_requests
 
-    store, engine = crawl(spark, tmp_store_dir, mor=True, rounds=1)
+    store, engine = crawl(spark, tmp_store_dir, rounds=1)
     leased_only = spark.read.parquet(store._delta_dir(0))
     assert eligible_requests(leased_only, round_id=1).count() == 0
     assert eligible_requests(leased_only, round_id=2).count() == leased_only.count()
@@ -105,7 +100,7 @@ def test_counters_match_exact_recount(spark, tmp_store_dir):
     """O(1) manifest counters must agree with a full-table recount after a
     multi-round crawl (handled via commit extras, total via prepare_fresh,
     both resynced at compaction)."""
-    store, engine = crawl(spark, tmp_store_dir, mor=True, rounds=3)
+    store, engine = crawl(spark, tmp_store_dir, rounds=3)
     assert store.info() == store.info(exact=True)
     failed_exact = store.read().filter(F.col("failed")).count()
     assert store._manifest["failed_total"] == failed_exact
@@ -114,7 +109,7 @@ def test_counters_match_exact_recount(spark, tmp_store_dir):
 def test_budget_needs_no_frontier_scan(spark, tmp_store_dir):
     """_remaining_budget is a manifest read — pin that it never launches a
     frontier job (VERDICT r1 item 3)."""
-    store, engine = crawl(spark, tmp_store_dir, mor=True, rounds=1)
+    store, engine = crawl(spark, tmp_store_dir, rounds=1)
     engine.options.max_requests_per_crawl = 100
     real_read = store.read
     store.read = lambda *a, **k: (_ for _ in ()).throw(AssertionError("frontier scan"))
@@ -127,10 +122,10 @@ def test_budget_needs_no_frontier_scan(spark, tmp_store_dir):
 
 
 def test_mor_resume_with_outstanding_deltas(spark, tmp_store_dir):
-    store, _ = crawl(spark, tmp_store_dir, mor=True, rounds=2)
+    store, _ = crawl(spark, tmp_store_dir, rounds=2)
     expect = snapshot_of(store)
     # crash: brand-new store object over the same directory mid-delta-chain
-    store2 = FrontierStore(spark, tmp_store_dir, num_partitions=4, merge_on_read=True)
+    store2 = FrontierStore(spark, tmp_store_dir, num_partitions=4)
     assert store2._manifest["deltas"] == store._manifest["deltas"]
     assert snapshot_of(store2) == expect
 
@@ -179,12 +174,14 @@ def test_mid_round_crash_recovers(spark, tmp_store_dir):
     assert store2.info() == store2.info(exact=True)  # counters survived the crash
 
 
-def test_legacy_manifest_backfills_delta_stats(spark, tmp_store_dir):
+def test_legacy_manifest_backfills_delta_stats(spark, tmp_store_dir, monkeypatch):
     """Manifests written before delta_rows/delta_id_bytes existed list
     outstanding deltas with no stats; the sums must be backfilled from the
     delta files — not silently treated as 0, which would unconditionally
     broadcast arbitrarily large deltas (ADVICE r3)."""
     import json
+
+    from crawlee_spark.operators import sizing
 
     store = FrontierStore(spark, tmp_store_dir, num_partitions=4, compact_every=100)
     store.add_requests(
@@ -207,5 +204,5 @@ def test_legacy_manifest_backfills_delta_stats(spark, tmp_store_dir):
     assert s2._outstanding_delta_stats() == (want_rows, want_bytes)
     # and the guard still answers from real sizes
     assert s2._deltas_broadcastable()
-    s2.delta_broadcast_max_bytes = 1
+    monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", 1)
     assert not s2._deltas_broadcastable()

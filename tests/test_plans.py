@@ -69,51 +69,37 @@ def test_robots_join_broadcasts(spark, store):
     assert "BroadcastHashJoin" in plan
 
 
-def test_robots_join_strategy_switches_with_size(spark, store):
-    """maybe_broadcast: a small robots dim broadcasts; one above the cap
-    falls back to a shuffle join (no broadcast build of an unbounded dim)."""
-    from crawlee_spark.operators.engine import maybe_broadcast
-
-    robots = spark.createDataFrame(
-        [(f"h{i}.example.com", "User-agent: *\n") for i in range(10)],
-        "host string, robots_txt string",
-    )
-    small = store.read().join(maybe_broadcast(robots, max_rows=100), "host", "left")
-    assert "BroadcastHashJoin" in explain_str(small, "simple")
-    big = store.read().join(maybe_broadcast(robots, max_rows=5), "host", "left")
-    assert "BroadcastHashJoin" not in explain_str(big, "simple")
-
-
-def test_robots_broadcast_gates_on_bytes_not_just_rows(spark, store):
-    """A wide dim under the ROW cap but over the BYTE cap must fall back to
-    a shuffle join (VERDICT r3 item 5: 4 M rows of KB-wide values is a
-    multi-GB broadcast the row guard alone would wave through)."""
-    from crawlee_spark.operators.engine import maybe_broadcast
+def test_robots_join_strategy_switches_with_size(spark, store, monkeypatch):
+    """maybe_broadcast: a robots dim whose estimated build fits the byte cap
+    broadcasts; the same dim over the cap falls back to a shuffle join (no
+    broadcast build of an unbounded dim). The estimate counts the bodies'
+    bytes, not just rows: 10 rows of 10 KB values are ~100 KB of payload."""
+    from crawlee_spark.operators import sizing
+    from crawlee_spark.operators.sizing import maybe_broadcast
 
     wide = spark.createDataFrame(
         [(f"h{i}.example.com", "x" * 10_000) for i in range(10)],
         "host string, robots_txt string",
     )
-    ok = store.read().join(maybe_broadcast(wide, max_rows=100, max_bytes=1 << 20), "host", "left")
+    monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", 1 << 20)
+    ok = store.read().join(maybe_broadcast(wide), "host", "left")
     assert "BroadcastHashJoin" in explain_str(ok, "simple")
-    # same 10 rows, but ~100 KB of bodies > a 50 KB byte cap
-    toobig = store.read().join(
-        maybe_broadcast(wide, max_rows=100, max_bytes=50_000), "host", "left"
-    )
+    monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", 50_000)
+    toobig = store.read().join(maybe_broadcast(wide), "host", "left")
     assert "BroadcastHashJoin" not in explain_str(toobig, "simple")
 
 
-def test_mor_delta_broadcast_gates_on_bytes(spark, tmp_path_factory):
+def test_mor_delta_broadcast_gates_on_bytes(spark, tmp_path_factory, monkeypatch):
     """The MOR read's delta-id broadcast HINT must respect the byte cap:
     over it, the read stops hinting and the join strategy is left to
     Catalyst's own size estimates (which at scale means a shuffle join).
     Auto-broadcast is disabled for the assertion so the hint alone decides —
     on a toy delta Catalyst would otherwise broadcast regardless."""
+    from crawlee_spark.operators import sizing
+
     d = str(tmp_path_factory.mktemp("plans-mor-bytes"))
-    s = FrontierStore(
-        spark, d, num_partitions=4, merge_on_read=True, compact_every=100,
-        delta_broadcast_max_bytes=10,  # ids are ~15 B each: always over
-    )
+    s = FrontierStore(spark, d, num_partitions=4, compact_every=100)
+    monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", 10)  # ids are ~15 B each: always over
     s.add_requests(
         spark.createDataFrame([(f"http://a.com/{i}",) for i in range(10)], "url string")
     )
@@ -125,7 +111,7 @@ def test_mor_delta_broadcast_gates_on_bytes(spark, tmp_path_factory):
         plan = explain_str(s.read(), "simple")
         assert "BroadcastHashJoin" not in plan
         # and under the cap the hint fires even with auto-broadcast off
-        s.delta_broadcast_max_bytes = 128 << 20
+        monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", 128 << 20)
         assert "BroadcastHashJoin" in explain_str(s.read(), "simple")
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -147,7 +133,7 @@ def test_mor_read_merges_without_frontier_shuffle(spark, tmp_path_factory):
     (VERDICT r2 item 1 — the old groupBy(request_id).max_by over base∪deltas
     was a full-frontier wide-row shuffle on every read)."""
     d = str(tmp_path_factory.mktemp("plans-mor"))
-    s = FrontierStore(spark, d, num_partitions=4, merge_on_read=True, compact_every=100)
+    s = FrontierStore(spark, d, num_partitions=4, compact_every=100)
     s.add_requests(
         spark.createDataFrame([(f"http://a.com/{i}",) for i in range(10)], "url string")
     )

@@ -2,7 +2,7 @@
 
 Measures the REAL per-round cycle (claim → fetch-join → extract UDFs → gate
 → enqueue → outcome merge → commit) rather than the enqueue/claim microbench
-in bench.py. Compares full-snapshot commits vs merge-on-read deltas.
+in bench.py.
 
     python tools/bench_engine.py [--pages 50000] [--rounds 3] [--cpus 16]
 """
@@ -37,8 +37,7 @@ def make_pages(spark, n: int):
 
 
 def run(
-    mor: bool, pages_n: int, rounds: int, cpus: int, concurrency: int = 2_000,
-    with_handler: bool = False,
+    pages_n: int, rounds: int, cpus: int, concurrency: int = 2_000, with_handler: bool = False
 ) -> dict:
     from crawlee_spark.operators.engine import CrawlEngine, CrawlOptions
     from crawlee_spark.operators.enqueue import EnqueueOptions
@@ -46,10 +45,10 @@ def run(
     from crawlee_spark.operators.scheduler import PolitenessPolicy
     from crawlee_spark.session import get_spark
 
-    spark = get_spark(f"bench-engine-{mor}", master=f"local[{cpus}]")
+    spark = get_spark("bench-engine", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     root = tempfile.mkdtemp(prefix="bench-engine-", dir=os.environ.get("SPARK_GRAFT_LOCAL_DIR"))
-    store = FrontierStore(spark, root, num_partitions=32, merge_on_read=mor, compact_every=16)
+    store = FrontierStore(spark, root, num_partitions=32, compact_every=16)
     pages = make_pages(spark, pages_n)
     pages_dir = os.path.join(root, "pages")
     pages.write.parquet(pages_dir)  # fixed source table, like a WARC store
@@ -76,17 +75,13 @@ def run(
         spark,
         store,
         spark.read.parquet(pages_dir),
-        # small claim vs large frontier: the regime where full-snapshot
-        # rewrites hurt (each round touches ~2k of pages_n rows)
+        # small claim vs large frontier: each round touches ~2k of pages_n rows
         policy=PolitenessPolicy(max_concurrency=concurrency, per_host_cap=max(2, concurrency // 1000)),
         options=CrawlOptions(
             enqueue=EnqueueOptions(strategy="same-hostname"), max_rounds=rounds,
             handlers=handlers,
         ),
     )
-    bc = os.environ.get("SPARK_GRAFT_CLAIMS_BC_MAX")  # A/B the fetch-join pruning
-    if bc is not None:
-        engine.claims_broadcast_max_rows = int(bc)
     seeds = spark.range(pages_n).select(
         F.concat(
             F.lit("https://h.ex"), (F.col("id") % 1000).cast("string"), F.lit(".org/p"),
@@ -107,7 +102,6 @@ def run(
     wall = time.time() - t0
     spark.stop()
     return {
-        "mor": mor,
         "pages": pages_n,
         "rounds": len(per_round),
         "round_secs": per_round,
@@ -122,13 +116,11 @@ def main():
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--cpus", type=int, default=16)
     ap.add_argument("--concurrency", type=int, default=2_000)
-    ap.add_argument("--mor-only", action="store_true", help="skip the full-snapshot variant")
     ap.add_argument("--with-handler", action="store_true", help="attach a pandas requestHandler")
     args = ap.parse_args()
-    for mor in ((True,) if args.mor_only else (False, True)):
-        out = run(mor, args.pages, args.rounds, args.cpus, args.concurrency, args.with_handler)
-        out["with_handler"] = args.with_handler
-        print(json.dumps(out))
+    out = run(args.pages, args.rounds, args.cpus, args.concurrency, args.with_handler)
+    out["with_handler"] = args.with_handler
+    print(json.dumps(out))
 
 
 if __name__ == "__main__":
