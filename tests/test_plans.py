@@ -70,10 +70,30 @@ def test_robots_join_broadcasts(spark, store):
 
 
 def test_robots_join_strategy_switches_with_size(spark, store, monkeypatch):
-    """maybe_broadcast: a robots dim whose estimated build fits the byte cap
-    broadcasts; the same dim over the cap falls back to a shuffle join (no
-    broadcast build of an unbounded dim). The estimate counts the bodies'
-    bytes, not just rows: 10 rows of 10 KB values are ~100 KB of payload."""
+    """maybe_broadcast: a small robots dim broadcasts; one whose estimated
+    build is over the cap falls back to a shuffle join (no broadcast build of
+    an unbounded dim). Bodies are short, so the row count decides here."""
+    from crawlee_spark.operators import sizing
+    from crawlee_spark.operators.sizing import maybe_broadcast
+
+    robots = spark.createDataFrame(
+        [(f"h{i}.example.com", "User-agent: *\n") for i in range(10)],
+        "host string, robots_txt string",
+    )
+    monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", 100 * sizing.ROW_OVERHEAD)
+    small = store.read().join(maybe_broadcast(robots), "host", "left")
+    assert "BroadcastHashJoin" in explain_str(small, "simple")
+    # the cap admits at most 5 rows even with no payload: 10 rows are over it
+    monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", 5 * sizing.ROW_OVERHEAD)
+    big = store.read().join(maybe_broadcast(robots), "host", "left")
+    assert "BroadcastHashJoin" not in explain_str(big, "simple")
+
+
+def test_robots_broadcast_gates_on_bytes_not_just_rows(spark, store, monkeypatch):
+    """A wide dim with few rows but over the BYTE cap must fall back to a
+    shuffle join: millions of rows of KB-wide values is a multi-GB broadcast
+    a row guard alone would wave through. 10 rows of 10 KB bodies are
+    ~100 KB of payload."""
     from crawlee_spark.operators import sizing
     from crawlee_spark.operators.sizing import maybe_broadcast
 
@@ -84,6 +104,7 @@ def test_robots_join_strategy_switches_with_size(spark, store, monkeypatch):
     monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", 1 << 20)
     ok = store.read().join(maybe_broadcast(wide), "host", "left")
     assert "BroadcastHashJoin" in explain_str(ok, "simple")
+    # same 10 rows, but ~100 KB of bodies > a 50 KB byte cap
     monkeypatch.setattr(sizing, "BROADCAST_MAX_BYTES", 50_000)
     toobig = store.read().join(maybe_broadcast(wide), "host", "left")
     assert "BroadcastHashJoin" not in explain_str(toobig, "simple")
