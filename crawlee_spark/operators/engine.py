@@ -49,8 +49,10 @@ from crawlee_spark.operators.frontier import (
     STATE_DONE,
     STATE_SKIPPED,
     STATE_ERROR,
+    URL_KEY_COLS,
     FrontierStore,
     candidates_to_requests,
+    with_url_keys,
 )
 from crawlee_spark.operators.scheduler import (
     PolitenessPolicy,
@@ -650,29 +652,45 @@ class CrawlEngine:
         # probe (E9): a 200 carrying a challenge page is reclassified as a
         # session error exactly like a blocked status code
         # (isRequestBlocked, http-crawler.ts:600-614 → SessionError path).
-        succ0 = classified.filter((F.col("_outcome") == "success") & ~skip_nav)
-        rest = (
-            classified.filter((F.col("_outcome") != "success") | skip_nav)
-            .withColumn("extracted_text", F.lit(None).cast("string"))
-            .withColumn("_links", F.lit(None).cast("array<string>"))
-            .withColumn("_blocked_sel", F.lit(None).cast("array<string>"))
-            # no navigation -> no response url: request.loadedUrl stays unset
-            # even when the pages source happens to carry a row for the url
-            .withColumn(
-                "loaded_url",
-                F.when(skip_nav, F.lit(None).cast("string")).otherwise(F.col("loaded_url")),
-            )
+        # One projection, one Python pass: the parse reads the html of a
+        # JVM-only superset of the successes (``pre_ok`` uses no UDF output,
+        # so Spark runs the parse in the same Arrow node as the robots and
+        # strategy UDFs) and the exact success mask is applied to its
+        # outputs. Filtering on ``_outcome`` instead would re-run those UDFs,
+        # and success/rest branches would plan the fetch join twice.
+        # ``pre_ok`` mirrors the classifier's non-retryable fail branch
+        # null-safely: a null status_code or content_type makes that branch
+        # null, not true, so such a row still ends as a success and needs its
+        # page parsed.
+        pre_ok = (
+            F.col("html").isNotNull()
+            & ~skip_nav
+            & ~F.coalesce((F.col("status_code") >= 400) | ~mime_ok, F.lit(False))
         )
-        ext = succ0.withColumn(
-            "_page",
-            extract_page_udf("html", F.coalesce(F.col("loaded_url"), F.col("url")), "charset"),
-        ).select(
-            "*",
-            F.col("_page.text").alias("extracted_text"),
-            F.col("_page.links").alias("_links"),
-            F.col("_page.blocked").alias("_blocked_sel"),
-        ).drop("_page")
-        is_blocked_page = F.size("_blocked_sel") > 0
+        extracted_ok = (F.col("_outcome") == "success") & ~skip_nav
+        page = extract_page_udf(
+            F.when(pre_ok, F.col("html")),
+            F.coalesce(F.col("loaded_url"), F.col("url")),
+            "charset",
+        )
+        ext = (
+            classified.withColumn("_page", page)
+            .withColumns(
+                {
+                    # no navigation -> no response url: request.loadedUrl
+                    # stays unset even when the pages source has the url
+                    "loaded_url": F.when(skip_nav, F.lit(None).cast("string")).otherwise(
+                        F.col("loaded_url")
+                    ),
+                    "extracted_text": F.when(extracted_ok, F.col("_page.text")),
+                    "_links": F.when(extracted_ok, F.col("_page.links")),
+                    "_blocked_sel": F.when(extracted_ok, F.col("_page.blocked")),
+                }
+            )
+            .drop("_page")
+        )
+        # a null probe (every row but an extracted success) is "not blocked"
+        is_blocked_page = F.coalesce(F.size("_blocked_sel") > 0, F.lit(False))
         ext = ext.withColumn(
             "_outcome",
             F.when(
@@ -704,11 +722,11 @@ class CrawlEngine:
             # fall through to the usual narrow checkpoint. The extra wide
             # pin is this feature's documented cost, mirroring the
             # reference's own snapshot-write overhead.
-            wide = rest.unionByName(ext).localCheckpoint(eager=True)
+            wide = ext.localCheckpoint(eager=True)
             self._save_error_snapshots(wide)
             classified = wide.drop("html", "_blocked_sel").localCheckpoint(eager=True)
         else:
-            classified = rest.unionByName(ext).drop("html", "_blocked_sel").localCheckpoint(eager=True)
+            classified = ext.drop("html", "_blocked_sel").localCheckpoint(eager=True)
         # ---- user hooks AFTER the extraction checkpoint (their plans — and
         # the router's no-route probe — must never recompute the extraction
         # UDF) but BEFORE the round aggregate, so their reclassifications
@@ -890,17 +908,26 @@ class CrawlEngine:
                     )
                     .filter(F.col("url").isNotNull())
                 )
+            # ONE Python pass over the discovered links, pinned: the robots
+            # verdict (F5) and the URL_KEY_COLS. The skipped write, the gates
+            # and prepare_fresh read the pin, so none of them re-runs a UDF.
             if self.robots is not None:
+                from crawlee_spark.functions.robots import robots_allowed_udf
+
                 links = links.join(
                     self._robots.withColumnRenamed("host", "_rhost"),
                     F.lower(F.try_parse_url("url", F.lit("HOST"))) == F.col("_rhost"),
                     "left",
                 ).drop("_rhost")
-                robots_col = "robots_txt"
+                robots_ok = robots_allowed_udf("url", "robots_txt")
             else:
-                links = links.withColumn("robots_txt", F.lit(None).cast("string"))
-                robots_col = "robots_txt"
-            accepted, skipped = self._gate_links(links, robots_col)
+                robots_ok = F.lit(True)
+            links = (
+                with_url_keys(links.withColumn("_robots_ok", robots_ok))
+                .drop("robots_txt")
+                .localCheckpoint(eager=True)
+            )
+            accepted, skipped = self._gate_links(links)
             skipped.withColumn("round_id", F.lit(round_id)).write.mode("append").parquet(self.skipped_dir)
             # deterministic arrival order: (parent rank in this round, position
             # on page). 32-bit stride: parent rank is bounded by the per-round
@@ -911,7 +938,7 @@ class CrawlEngine:
             accepted = accepted.withColumn(
                 "_arrival",
                 F.shiftleft(F.col("_parent_rank").cast("long"), 32) + F.col("_pos"),
-            ).drop("_parent_rank", "_pos", "robots_txt", "origin_label")
+            ).drop("_parent_rank", "_pos", "_robots_ok", "origin_label")
             budget = self._remaining_budget()
             limit = self.options.enqueue.limit
             if limit is not None:
@@ -920,15 +947,17 @@ class CrawlEngine:
                 c for c in ("label", "user_data", "method", "payload")
                 if c in accepted.columns  # F3 per-pattern / base-label overrides
             ]
-            shaped = candidates_to_requests(
+            total_before = self.store._manifest["total_requests"]
+            # prepare_fresh shapes the survivors into frontier rows itself, so
+            # the dedup shuffle carries only the candidates' own columns
+            fresh_rows = self.store.prepare_fresh(
                 accepted.select(
                     # enqueue_strategy stamped per gate segment (recorded for F2)
-                    "url", "crawl_depth", "_arrival", "enqueue_strategy", *carry,
+                    "url", "crawl_depth", "_arrival", "enqueue_strategy", *URL_KEY_COLS,
+                    *carry,
                 ),
-                forefront=False,
+                max_new=budget,
             )
-            total_before = self.store._manifest["total_requests"]
-            fresh_rows = self.store.prepare_fresh(shaped, max_new=budget)
             # prepare_fresh already counted the survivors into the manifest —
             # no extra job for the metric
             new_enqueued = self.store._manifest["total_requests"] - total_before
@@ -1091,7 +1120,7 @@ class CrawlEngine:
             return EnqueueOptions(**{**o.__dict__, "max_crawl_depth": self.options.max_crawl_depth})
         return o
 
-    def _gate_links(self, links: DataFrame, robots_col: str):
+    def _gate_links(self, links: DataFrame):
         """Gate discovered links: one ``gate_candidates`` pass, or — with
         ``enqueue_by_label`` — one pass per ORIGIN label, mirroring each
         route's own enqueueLinks call in the reference (the listing->detail
@@ -1101,11 +1130,20 @@ class CrawlEngine:
         frame (no shuffle, no extra scan of anything upstream — the frame
         derives from the checkpointed round), and the gated segments union
         by name. The accepted frame always carries ``enqueue_strategy``
-        (per segment) for the F2 redirect re-check."""
+        (per segment) for the F2 redirect re-check.
+
+        ``links`` is the round's link pin: it carries the robots verdict
+        ``_robots_ok`` and the ``URL_KEY_COLS``. The F4 ``transform`` hook may
+        rewrite ``url``, so a segment with a transform drops the keys before
+        the hook and derives them again from the final url."""
 
         def one(part: DataFrame, o: EnqueueOptions):
             o = self._merged_opts(o)
-            acc, skip = gate_candidates(part, o, robots_txt_col=robots_col)
+            if o.transform is not None:
+                part = part.drop(*URL_KEY_COLS)
+            acc, skip = gate_candidates(part, o, robots_ok_col="_robots_ok")
+            if o.transform is not None:
+                acc = with_url_keys(acc)
             return acc.withColumn("enqueue_strategy", F.lit(o.strategy)), skip
 
         by_label = self.options.enqueue_by_label

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 
 from crawlee_spark.functions.keying import host_col, origin_col, registrable_domain_col, scheme_col
-from crawlee_spark.functions.robots import robots_allowed_udf
 
 HTTP_SCHEMES = ("http", "https")
 
@@ -230,14 +229,16 @@ def gate_candidates(
     url_col: str = "url",
     origin_col_name: str = "origin_url",
     depth_col: str = "crawl_depth",
-    robots_txt_col: str | None = None,
+    robots_ok_col: str | None = None,
     transform=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Apply F1/F3/F5/F7 gates; returns (accepted, skipped(url, reason)).
 
     ``links`` must carry the candidate URL, its source page URL
-    (``origin_url``) and its depth; when ``robots_txt_col`` is given the
-    robots gate runs too (rules already joined on host by the caller).
+    (``origin_url``) and its depth; when ``robots_ok_col`` is given the
+    robots gate runs too, reading that boolean column: the caller evaluates
+    ``robots_allowed_udf`` once and pins it, so the gate itself stays
+    JVM-only however many actions read it.
 
     ``transform`` is the F4 ``transformRequestFunction`` hook
     (shared.ts:299-305): a ``DataFrame → DataFrame`` callable applied to the
@@ -269,8 +270,8 @@ def gate_candidates(
     if options.max_crawl_depth is not None:
         checks.append(("depth", F.col(depth_col) <= options.max_crawl_depth))
 
-    if robots_txt_col is not None:
-        checks.append(("robotsTxt", robots_allowed_udf(url, F.col(robots_txt_col))))
+    if robots_ok_col is not None:
+        checks.append(("robotsTxt", F.col(robots_ok_col)))
 
     # first failing gate names the skip reason (reference applies them in order)
     reason = F.lit(None).cast("string")

@@ -41,7 +41,7 @@ import shutil
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -93,6 +93,26 @@ STATE_ERROR = 6
 STATE_SKIPPED = 7
 
 
+# The engine's link pin hands its PSL lookup to the request shaping under
+# this private name (as ``_arrival`` carries arrival order): the shaping reads
+# it instead of running the lookup again. A caller's own ``host`` or
+# ``registrable_domain`` column is never trusted; both derive from ``url``.
+PINNED_DOMAIN_COL = "_registrable_domain"
+URL_KEY_COLS = ("unique_key", PINNED_DOMAIN_COL)
+
+
+def with_url_keys(df: DataFrame) -> DataFrame:
+    """Add the ``URL_KEY_COLS`` of ``df``'s url: the normalized
+    ``unique_key`` (kept when ``df`` already carries one, as
+    ``candidates_to_requests`` does) and the pinned registrable domain —
+    the two Python lookups of shaping a request, evaluated in the pass that
+    pins them."""
+    out = df
+    if "unique_key" not in df.columns:
+        out = out.withColumn("unique_key", unique_key_col("url"))
+    return out.withColumn(PINNED_DOMAIN_COL, registrable_domain_col(host_col("url")))
+
+
 def candidates_to_requests(
     df: DataFrame,
     *,
@@ -105,7 +125,9 @@ def candidates_to_requests(
     Invalid URLs (unnormalizable, reference F9 shared.ts:242-276) are dropped
     by the caller via ``unique_key IS NULL`` if desired; here we keep the
     reference fallback uniqueKey = raw url when normalization fails
-    (request.ts:426 ``normalizeUrl(url) || url``).
+    (request.ts:426 ``normalizeUrl(url) || url``). ``registrable_domain`` is
+    read from ``PINNED_DOMAIN_COL`` when the frame carries it (the engine's
+    link pin), else looked up from the host.
     """
     cols = df.columns
     out = df
@@ -118,7 +140,12 @@ def candidates_to_requests(
         # reference the computed host column (CollapseProject keeps the
         # single evaluation — host_col is a try_parse_url, ~1µs/row; the
         # old inline form parsed every URL twice)
-        .withColumn("registrable_domain", registrable_domain_col(F.col("host")))
+        .withColumn(
+            "registrable_domain",
+            F.col(PINNED_DOMAIN_COL)
+            if PINNED_DOMAIN_COL in cols
+            else registrable_domain_col(F.col("host")),
+        )
         .withColumn("forefront", F.lit(forefront) if "forefront" not in cols else F.col("forefront"))
         .withColumn(
             "crawl_depth",
@@ -524,19 +551,18 @@ class FrontierStore:
         seq = (deltas[-1] + 1) if deltas else 0
         out_dir = self._delta_dir(seq)
         changed = changed.select(*[f.name for f in FRONTIER_SCHEMA.fields])
-        changed.repartition(max(4, self.num_partitions // 4), "request_id").write.mode(
-            "overwrite"
-        ).parquet(out_dir)
+        # the delta's row count and id byte mass (for the broadcast guard)
+        # are observed on the write itself — no read-back job
+        obs = Observation()
+        changed.repartition(max(4, self.num_partitions // 4), "request_id").observe(
+            obs, F.count("*").alias("n"), F.sum(F.octet_length("request_id")).alias("b")
+        ).write.mode("overwrite").parquet(out_dir)
         deltas.append(seq)
         if round_increment:
             self._manifest["round"] += 1
         if extra:
             self._manifest.update(extra)
-        _dstats = (
-            self.spark.read.parquet(out_dir)
-            .agg(F.count("*").alias("n"), F.sum(F.octet_length("request_id")).alias("b"))
-            .collect()[0]
-        )
+        _dstats = obs.get
         n_changed = _dstats["n"]
         self._manifest.setdefault("delta_rows", {})[str(seq)] = n_changed
         self._manifest.setdefault("delta_id_bytes", {})[str(seq)] = int(_dstats["b"] or 0)
@@ -605,7 +631,8 @@ class FrontierStore:
         # full frontier row yet: the dedup shuffle should carry only the
         # candidate's own columns, not the derivable ones (host, domain,
         # state machine defaults) — those are recomputed map-side on the
-        # survivors after the anti-join, which is strictly fewer rows.
+        # survivors after the anti-join, which is strictly fewer rows (the
+        # domain is read from ``PINNED_DOMAIN_COL`` when the engine pinned it).
         keyed = candidates
         if "request_id" not in keyed.columns:
             if "unique_key" not in keyed.columns:

@@ -293,6 +293,94 @@ def test_enqueue_pattern_label_reaches_frontier(spark, tmp_store_dir):
     assert res.get("https://a.com/detail/1") == "DETAIL"
 
 
+def test_transform_hook_keys_follow_rewritten_url(spark, tmp_store_dir):
+    """F4 transformRequestFunction (shared.ts:299-305) may rewrite the url:
+    the enqueued rows' unique_key, request_id, host and registrable_domain
+    are those of the REWRITTEN url, not of the discovered link (the round
+    keys links before gating, so a transform must not reuse those keys)."""
+    from urllib.parse import urlparse
+
+    from crawlee_spark.functions.keying import (
+        compute_unique_key_py,
+        registrable_domain_py,
+        request_id_py,
+    )
+
+    pages = spark.createDataFrame(
+        [
+            (
+                "https://a.com/start",
+                b'<html><body><a href="/detail/1">d</a><a href="/list/2">l</a></body></html>',
+            ),
+        ],
+        "url string, html binary",
+    )
+
+    def rewrite(df):
+        moved = F.regexp_replace("url", r"^https://a\.com", "https://News.B.org")
+        return df.withColumn("url", F.concat(moved, F.lit("?utm_source=t")))
+
+    engine = build_engine(
+        spark,
+        tmp_store_dir,
+        pages,
+        options=CrawlOptions(enqueue=EnqueueOptions(strategy="all", transform=rewrite)),
+    )
+    engine.add_seeds(spark.createDataFrame([("https://a.com/start",)], "url string"))
+    assert engine.run_round()["enqueued"] == 2
+    rows = [r for r in engine.store.read().collect() if r["url"] != "https://a.com/start"]
+    assert sorted(r["url"] for r in rows) == [
+        "https://News.B.org/detail/1?utm_source=t",
+        "https://News.B.org/list/2?utm_source=t",
+    ]
+    for r in rows:
+        uk = compute_unique_key_py(r["url"])
+        assert uk.startswith("https://news.b.org/") and "utm_source" not in uk
+        assert r["unique_key"] == uk
+        assert r["request_id"] == request_id_py(uk)
+        assert r["host"] == "news.b.org"
+        assert r["registrable_domain"] == registrable_domain_py(urlparse(r["url"]).hostname)
+        assert r["registrable_domain"] == "b.org"
+
+
+def test_null_status_or_content_type_page_is_extracted(spark, tmp_store_dir):
+    """A 200-shaped page with a NULL content_type, or a NULL status_code,
+    never takes the non-retryable fail branch (status >= 400 or unsupported
+    mime is NULL, not true), so it ends as a success — and its text and links
+    are extracted like any other success, not replaced by an empty parse."""
+    pages = spark.createDataFrame(
+        [
+            (
+                "https://a.com/no-type",
+                b'<html><body><p>typeless page</p><a href="/x">x</a></body></html>',
+                200,
+                None,
+            ),
+            (
+                "https://a.com/no-status",
+                b'<html><body><p>statusless page</p><a href="/y">y</a></body></html>',
+                None,
+                "text/html",
+            ),
+        ],
+        "url string, html binary, status_code int, content_type string",
+    )
+    engine = build_engine(spark, tmp_store_dir, pages)
+    engine.add_seeds(
+        spark.createDataFrame([("https://a.com/no-type",), ("https://a.com/no-status",)], "url string")
+    )
+    metrics = engine.run_round()
+    assert {r["url"]: r["outcome"] for r in engine.outcomes().collect()} == {
+        "https://a.com/no-type": "success",
+        "https://a.com/no-status": "success",
+    }
+    texts = {r["url"]: r["text"] for r in engine.results().collect()}
+    assert "typeless page" in texts["https://a.com/no-type"]
+    assert "statusless page" in texts["https://a.com/no-status"]
+    assert metrics["links_found"] == 2 and metrics["enqueued"] == 2
+    assert {"https://a.com/x", "https://a.com/y"} <= {r["url"] for r in engine.store.read().collect()}
+
+
 def test_blocked_selector_page_rotates_session(spark, tmp_store_dir):
     """E9: a 200 response whose body carries a challenge-page selector is a
     session error (rotate, don't mark handled) — isRequestBlocked

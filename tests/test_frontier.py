@@ -169,6 +169,26 @@ def test_budget_only_new_rows(spark, tmp_store_dir):
     assert urls == ["/a", "/b", "/c"]
 
 
+def test_caller_host_and_domain_columns_are_rederived(spark, tmp_store_dir):
+    """``host`` and ``registrable_domain`` always follow the url: the
+    per-host politeness caps and the robots join key on them, so a caller's
+    own columns of those names (mixed-case, or meaning something else) are
+    replaced, on the shaping and on the enqueue path alike."""
+    from crawlee_spark.operators.frontier import candidates_to_requests
+
+    cands = spark.createDataFrame(
+        [("https://Shop.Example.co.uk/a", "Shop.Example.co.uk", "tenant-7")],
+        "url string, host string, registrable_domain string",
+    )
+    want = ("shop.example.co.uk", "example.co.uk")
+    row = candidates_to_requests(cands).collect()[0]
+    assert (row["host"], row["registrable_domain"]) == want
+    store = make_store(spark, tmp_store_dir)
+    store.add_requests(cands)
+    row = store.read().collect()[0]
+    assert (row["host"], row["registrable_domain"]) == want
+
+
 def test_info_counters(spark, tmp_store_dir):
     store = make_store(spark, tmp_store_dir)
     store.add_requests(urls_df(spark, [f"http://example.com/{i}" for i in range(5)]))

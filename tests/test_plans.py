@@ -308,3 +308,42 @@ def test_spread_round_robins_a_single_file_scan(spark, tmp_path_factory):
     assert len(out.collect()) == 40  # collect() finalizes out's OWN adaptive plan
     executed = out._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in executed
+
+
+def test_plain_round_runs_two_python_passes(spark, tmp_path_factory):
+    """A plain round with robots takes exactly two Python (ArrowEvalPython)
+    passes: one in the extraction checkpoint (robots re-check, F2 strategy
+    PSL lookups, page parse) and one in the pinned link-gating pass (robots
+    verdict, normalize, PSL). Every other action of the round — the skipped
+    writes, prepare_fresh, the delta commits — runs in the JVM only. Each
+    Python node costs a fixed per-task overhead, so a second evaluation of a
+    UDF (a Filter over a UDF-derived column, or union branches re-planning
+    the fetch join) is a visible regression here."""
+    from crawlee_spark.operators.engine import CrawlEngine, CrawlOptions
+    from crawlee_spark.sources.fixtures import make_pages, make_pages_rows, make_robots, make_seeds
+    from tests.plan_capture import capture_actions
+
+    store = FrontierStore(spark, str(tmp_path_factory.mktemp("plans-round")), num_partitions=4)
+    engine = CrawlEngine(
+        spark,
+        store,
+        make_pages(spark, 40),
+        robots=make_robots(spark),
+        policy=PolitenessPolicy(max_concurrency=50, per_host_cap=10, salt_buckets=4),
+        options=CrawlOptions(),
+    )
+    engine.add_seeds(make_seeds(spark, make_pages_rows(40)))
+    with capture_actions() as taken:
+        metrics = engine.run_round()
+    assert metrics["links_found"] > 0 and metrics["enqueued"] > 0
+    passes = [(a, node) for a in taken for node in a.python]
+    assert len(passes) == 2, [f"{a.kind} in {a.caller}: {n[:120]}" for a, n in passes]
+    (extract, extract_node), (links, links_node) = passes
+    for udf in ("robots_allowed_udf", "get_domain_udf", "extract_page_udf"):
+        assert udf in extract_node
+    for udf in ("robots_allowed_udf", "_normalize_or_raw_udf", "get_domain_udf"):
+        assert udf in links_node
+    assert "extract_page_udf" not in links_node and "_normalize_or_raw_udf" not in extract_node
+    assert (extract.kind, links.kind) == ("localCheckpoint", "localCheckpoint")
+    # one branch over the fetch join: no success/rest union re-planning it
+    assert "Union" not in extract.plan
