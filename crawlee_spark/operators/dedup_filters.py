@@ -222,7 +222,9 @@ def bloom_anti_join(
     Only maybe-seen candidates enter the anti-join shuffle; definitely-new
     ones bypass it. Result is exactly equal to the plain left-anti join —
     verified property in tests/test_dedup_filters.py."""
+    # pinned: both union branches read it, and each would re-run the probe
     tagged = split_candidates(candidates, filters, id_col=id_col, num_buckets=num_buckets)
+    tagged = tagged.localCheckpoint(eager=True)
     fresh_fast = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen", "bucket", "_h")
     checked = (
         tagged.filter(F.col("maybe_seen"))

@@ -3,10 +3,13 @@
 One round = the set-wise equivalent of BasicCrawler._runTaskFunction
 (basic-crawler.ts:1601-1747) applied to the whole claimable set at once:
 
-  claim (O2-O5, C3) → fetch = frontier ⋈ pages (S11 replacement) →
-  MIME/status gate (E5, E9) → extract text + links (E1-E2 Arrow UDFs) →
-  gate links (F1-F9) → dedup + enqueue (D5/D7) → outcomes: success /
-  retry / fail (C4-C5, O8-O9) → stats append (C10) → snapshot commit (C11).
+  claim (O2-O5, C3) → lease commit (O5) → fetch = frontier ⋈ pages (S11
+  replacement) + MIME/status gate (E5, E9) → extract text + links (E1-E2
+  Arrow UDFs) → user hooks (C13) → round aggregate → gate links (F1-F9) +
+  dedup + enqueue (D5/D7) → side outputs: skipped, results, stats append
+  (C10) → outcome commit: success / retry / fail (C4-C5, O8-O9, C11).
+
+``run_round`` calls one method per phase, in that order.
 
 Retry policy (basic-crawler.ts:1881-1941):
 - blocked statuses {401,403,429} (session_pool/consts.ts:1) ⇒ session
@@ -29,20 +32,25 @@ round identically (tested in tests/test_engine.py::test_resume).
 from __future__ import annotations
 
 import os
+import time
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Callable
+from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 if TYPE_CHECKING:
     import pandas as pd
 
-    from crawlee_spark.operators.handlers import RequestHandler
-
+from crawlee_spark.functions.errors import error_snapshot_filename_col
 from crawlee_spark.functions.html_text import extract_page_udf
-from crawlee_spark.operators.enqueue import EnqueueOptions, gate_candidates
+from crawlee_spark.functions.keying import host_col
+from crawlee_spark.functions.robots import robots_allowed_udf
+from crawlee_spark.operators.enqueue import (
+    EnqueueOptions, gate_candidates, matches_enqueue_strategy_col,
+)
 from crawlee_spark.operators.frontier import (
     FRONTIER_SCHEMA,
     STATE_BEFORE_NAV,
@@ -54,13 +62,28 @@ from crawlee_spark.operators.frontier import (
     candidates_to_requests,
     with_url_keys,
 )
+from crawlee_spark.operators.handlers import (
+    ENQUEUE_LABEL_COL, ENQUEUE_OUTPUT_TYPES, ENQUEUE_URLS_COL, ENQUEUE_USER_DATA_COL,
+    ERROR_MUTABLE_COLS, HANDLER_INPUT_COLS, RequestHandler, apply_error_handler,
+    apply_request_handlers, merged_extra_fields,
+)
+from crawlee_spark.operators.kvstore import KeyValueStore
+from crawlee_spark.operators.proxies import (
+    empty_tracker_state, predict_proxy_tiers, rotate_proxies, split_assignments,
+)
 from crawlee_spark.operators.scheduler import (
     PolitenessPolicy,
     claim_round,
     global_row_number,
 )
+from crawlee_spark.operators.sessions import (
+    SessionPolicy, assign_sessions, make_pool, replenish_pool, update_pool,
+)
 from crawlee_spark.operators.sizing import fits_broadcast, maybe_broadcast
-from crawlee_spark.operators.stats import OUTCOME_SCHEMA, final_statistics
+from crawlee_spark.operators.stats import (
+    OUTCOME_SCHEMA, error_summary, final_statistics, persist_run_statistics,
+)
+from crawlee_spark.sources.urls import parse_content_type_cols
 
 BLOCKED_STATUS_CODES = (401, 403, 429)  # session_pool/consts.ts:1
 SUPPORTED_MIME = (  # http-crawler.ts:65-66
@@ -75,6 +98,39 @@ SUPPORTED_MIME = (  # http-crawler.ts:65-66
 # distinct + broadcast + semi-join machinery (measured -7% at a 40 MB corpus,
 # while at the 100 TB design point the plain join shuffles the corpus).
 PAGES_PRUNE_MIN_BYTES = 1 << 30
+# ErrorSnapshotter: snapshots saved per round at most (smallest filenames
+# first), so the driver-side write loop stays bounded by error-template
+# cardinality
+MAX_ERROR_SNAPSHOTS_PER_ROUND = 100
+
+
+def _skip_nav() -> Column:
+    """request.skipNavigation (request.ts:268-277: stored in
+    userData.__crawlee.skipNavigation — same wire format here)."""
+    return F.coalesce(
+        F.get_json_object(F.col("user_data"), "$.__crawlee.skipNavigation").cast("boolean"),
+        F.lit(False),
+    )
+
+
+def _push_error(err: Column, when: Column | None = None) -> Column:
+    """pushErrorMessage: ``error_messages`` with ``err`` appended where
+    ``when`` holds and ``err`` is not null, else unchanged."""
+    pushed = err.isNotNull() if when is None else when & err.isNotNull()
+    return F.when(
+        pushed, F.concat(F.coalesce(F.col("error_messages"), F.array()), F.array(err))
+    ).otherwise(F.col("error_messages"))
+
+
+def _logged_outcome() -> Column:
+    """The outcome a round attempt is logged with: a redirect-strategy skip
+    is handled and finished, so it logs (and rates its session) as a
+    success."""
+    return (
+        F.when(F.col("_outcome") == "skip_redirect", F.lit("success"))
+        .otherwise(F.col("_outcome"))
+        .alias("outcome")
+    )
 
 
 def fetch_join(claimed: DataFrame, pages: DataFrame, *, prune_pages: bool = True) -> DataFrame:
@@ -137,11 +193,9 @@ class CrawlOptions:
     # ErrorSnapshotter (statisticsOptions.saveErrorSnapshots,
     # error_snapshotter.ts:42-160): persist errored attempts' page bodies
     # under ERROR_SNAPSHOT_* keys in the run's KV store. Opt-in; costs one
-    # extra wide checkpoint per round. Snapshot count per round is capped
-    # (deterministically, smallest filenames first) so the driver-side
-    # write loop stays bounded by error-template cardinality.
+    # extra wide checkpoint per round. Snapshot count per round is capped at
+    # MAX_ERROR_SNAPSHOTS_PER_ROUND.
     save_error_snapshots: bool = False
-    max_error_snapshots_per_round: int = 100
     # E5 extension (HttpCrawlerOptions.additionalMimeTypes,
     # http-crawler.ts:146/:301/:361): content types accepted IN ADDITION to
     # the built-in SUPPORTED_MIME prefixes
@@ -182,12 +236,6 @@ class CrawlEngine:
     session_policy: "SessionPolicy | None" = None  # enable the session pool (C6)
 
     def __post_init__(self):
-        from crawlee_spark.operators.handlers import (
-            ENQUEUE_OUTPUT_TYPES,
-            ENQUEUE_URLS_COL,
-            merged_extra_fields,
-        )
-
         merged = (
             [f.name for f in merged_extra_fields(self.options.handlers)]
             if self.options.handlers
@@ -227,8 +275,6 @@ class CrawlEngine:
         if self.options.force_response_encoding:
             pages = pages.withColumn("charset", F.lit(self.options.force_response_encoding))
         elif "charset" not in cols:
-            from crawlee_spark.sources.urls import parse_content_type_cols
-
             _, charset = parse_content_type_cols(
                 F.coalesce(F.col("content_type"), F.lit("")), F.col("url")
             )
@@ -240,8 +286,6 @@ class CrawlEngine:
         # fetch-join strategy; sources with no file footprint (synthesized
         # test frames) stay on the plain join
         try:
-            from urllib.parse import urlparse
-
             total = sum(os.path.getsize(urlparse(f).path) for f in self._pages.inputFiles())
         except Exception:
             total = 0
@@ -271,16 +315,12 @@ class CrawlEngine:
 
     def error_summary(self) -> DataFrame:
         """Grouped error report (ErrorTracker analog) over the outcome log."""
-        from crawlee_spark.operators.stats import error_summary
-
         return error_summary(self.outcomes())
 
     # -- session pool (C6) ------------------------------------------------------
     def session_pool(self) -> DataFrame | None:
         if self.session_policy is None:
             return None
-        from crawlee_spark.operators.sessions import make_pool
-
         if not os.path.exists(self.sessions_dir):
             make_pool(self.spark, self.session_policy.max_pool_size, 0).write.parquet(
                 self.sessions_dir
@@ -290,8 +330,6 @@ class CrawlEngine:
     def _update_sessions(
         self, outcomes_with_sessions: DataFrame, round_id: int, **update_kwargs
     ) -> None:
-        from crawlee_spark.operators.sessions import replenish_pool, update_pool
-
         pool = self.session_pool()
         updated = update_pool(
             pool, outcomes_with_sessions, self.session_policy, **update_kwargs
@@ -318,8 +356,6 @@ class CrawlEngine:
         a per-request in-batch rotation whose index continues from a
         persisted scalar offset (nextCustomUrlIndex), so nothing
         per-request is ever written."""
-        from crawlee_spark.operators.proxies import rotate_proxies
-
         with_sessions = self.session_policy is not None
         existing = None
         n_existing = 0
@@ -370,13 +406,6 @@ class CrawlEngine:
         predicts with decay, and the tracker state — histogram, current
         tier, rotation index — persists round-to-round per domain.
         Untouched domains carry their state forward."""
-        from crawlee_spark.functions.keying import host_col
-        from crawlee_spark.operators.proxies import (
-            empty_tracker_state,
-            predict_proxy_tiers,
-            split_assignments,
-        )
-
         state = (
             self.spark.read.parquet(self.proxy_state_dir)
             if os.path.exists(self.proxy_state_dir)
@@ -441,9 +470,6 @@ class CrawlEngine:
         per-round cap keeps the driver loop finite regardless. First
         occurrence (min order_no) wins — the deterministic set-analog of the
         reference's per-occurrence overwrite."""
-        from crawlee_spark.functions.errors import error_snapshot_filename_col
-        from crawlee_spark.operators.kvstore import KeyValueStore
-
         errs = wide.filter(
             (F.col("_outcome") != "success")
             & F.col("_error").isNotNull()
@@ -456,7 +482,7 @@ class CrawlEngine:
             errs.groupBy("_fn")
             .agg(F.min("_s").alias("_s"))
             .orderBy("_fn")
-            .limit(self.options.max_error_snapshots_per_round)
+            .limit(MAX_ERROR_SNAPSHOTS_PER_ROUND)
             .collect()
         )
         if not picked:
@@ -494,21 +520,83 @@ class CrawlEngine:
         shaped = candidates_to_requests(seeds, forefront=forefront)
         if self.options.max_crawl_depth is not None:
             shaped = shaped.filter(F.col("crawl_depth") <= self.options.max_crawl_depth)
-        if self.robots is not None:
-            from crawlee_spark.functions.robots import robots_allowed_udf
+        shaped = self._with_robots_verdict(shaped, F.col("host")).filter(F.col("_robots_ok"))
+        self.store.add_requests(
+            shaped.drop("_robots_ok"), forefront=forefront, max_new=self._remaining_budget()
+        )
 
-            shaped = (
-                shaped.join(self._robots, "host", "left")
-                .withColumn("_allowed", robots_allowed_udf("url", "robots_txt"))
-                .filter(F.col("_allowed"))
-                .drop("_allowed", "robots_txt")
+    # -- round decisions, one definition each ---------------------------------
+    def _with_robots_verdict(self, df: DataFrame, host: Column) -> DataFrame:
+        """``df`` with the robots verdict ``_robots_ok`` (F5): the robots dim
+        joined on ``host``, then ``robots_allowed_udf`` over ``url``. Every
+        caller keys on ``host_col`` (lower-cased, trailing dot stripped — the
+        frontier's ``host`` column is that too), so the seed gate, the link
+        gate and the fetch re-check agree on which rules a url falls under."""
+        if self.robots is None:
+            return df.withColumn("_robots_ok", F.lit(True))
+        return (
+            df.join(
+                self._robots.withColumnRenamed("host", "_rhost"), host == F.col("_rhost"), "left"
             )
-        self.store.add_requests(shaped, forefront=forefront, max_new=self._remaining_budget())
+            .withColumn("_robots_ok", robots_allowed_udf("url", "robots_txt"))
+            .drop("_rhost", "robots_txt")
+        )
+
+    def _mime_ok(self) -> Column:
+        """E5: the content type is a supported (or additional) MIME type."""
+        ok = F.lit(False)
+        for m in SUPPORTED_MIME + tuple(self.options.additional_mime_types):
+            ok = ok | F.col("content_type").startswith(m)
+        return ok
+
+    def _retry_or_fail(self) -> Column:
+        """A retryable error's outcome: ``retry`` while retry_count is under
+        the request's (or the crawl's) max retries and noRetry is unset,
+        else a final ``fail``."""
+        can_retry = F.col("retry_count") < F.coalesce(
+            F.col("max_retries"), F.lit(self.options.max_request_retries)
+        )
+        return F.when(can_retry & ~F.col("no_retry"), F.lit("retry")).otherwise(F.lit("fail"))
+
+    def _rotate_or_retry(self) -> Column:
+        """A session error's outcome: ``session_retry`` (no retryCount
+        consumed) until maxSessionRotations, then a retryable error."""
+        return F.when(
+            F.col("session_rotation_count") < self.options.max_session_rotations,
+            F.lit("session_retry"),
+        ).otherwise(self._retry_or_fail())
 
     # -- one round --------------------------------------------------------------
     def run_round(self) -> dict:
-        """Execute one scheduling round; returns round metrics."""
+        """Execute one scheduling round; returns round metrics. Each phase
+        (see the module docstring) takes its inputs as arguments and returns
+        its outputs."""
         round_id = self.store.round + 1
+        claimed, n_claimed, claim_url_bytes = self._claim(round_id)
+        if n_claimed == 0:
+            return {"round": round_id, "claimed": 0, "done": True}
+        self._commit_lease(claimed, round_id)
+        classified = self._fetch_classify(claimed, n_claimed, claim_url_bytes)
+        classified = self._extract(classified)
+        classified = self._run_hooks(classified)
+        cnts, n_links, n_emitted, r_lo, r_span = self._round_aggregate(classified)
+        fresh_rows, n_enqueued, gate_skipped = self._enqueue(
+            classified, n_links + n_emitted, n_claimed
+        )
+        self._write_side_outputs(classified, gate_skipped, round_id)
+        self._commit_outcomes(classified, fresh_rows, cnts, r_lo, r_span, round_id)
+        return {
+            "round": round_id,
+            "claimed": n_claimed,
+            "succeeded": cnts.get("success", 0),
+            "links_found": n_links,
+            "enqueued": n_enqueued,
+            "done": False,
+        }
+
+    def _claim(self, round_id: int) -> tuple[DataFrame, int, int]:
+        """Claim phase: the round's claim set with its session and proxy
+        assignments, pinned, plus its row count and url byte mass."""
         claimed = claim_round(self.store.read(), round_id, self.policy)
         if self.options.max_requests_per_crawl is not None:
             # O(1) manifest counter — not a frontier aggregate per round
@@ -518,8 +606,6 @@ class CrawlEngine:
         # C6: rotate a session onto each claimed request (hash rotation over
         # the usable pool — session_pool.ts:129-134)
         if self.session_policy is not None:
-            from crawlee_spark.operators.sessions import assign_sessions
-
             claimed = assign_sessions(claimed, self.session_pool(), round_id, self.session_policy)
         else:
             claimed = claimed.withColumn("session_id", F.lit(None).cast("string"))
@@ -528,23 +614,21 @@ class CrawlEngine:
         claimed = claimed.localCheckpoint(eager=True)  # pin the claim set
         # one aggregate gives the claim count AND the exact url byte mass the
         # fetch-join prune would broadcast, for sizing.fits_broadcast
-        _cstats = claimed.agg(
+        stats = claimed.agg(
             F.count("*").alias("n"),
             F.sum(F.octet_length("url")).alias("url_bytes"),
         ).collect()[0]
-        n_claimed = _cstats["n"]
-        claim_url_bytes = int(_cstats["url_bytes"] or 0)
-        if n_claimed == 0:
-            return {"round": round_id, "claimed": 0, "done": True}
+        return claimed, stats["n"], int(stats["url_bytes"] or 0)
 
-        # ---- O5 lease stamp: commit the claimed set as a mid-round delta
-        # (lease_until = this round, state BEFORE_NAV) — the live analog of
-        # listAndLockHead (request-queue.ts:228-298). A second writer at the
-        # same round sees the lease as unexpired and cannot re-claim; a crash
-        # after this commit resumes at round_id+1 where the lease has expired
-        # by round-number comparison and the rows are re-claimed — no unlock
-        # protocol. This is also the round-start commit (the round counter
-        # advances here, the outcome delta below completes the round).
+    def _commit_lease(self, claimed: DataFrame, round_id: int) -> None:
+        """O5 lease stamp: commit the claimed set as a mid-round delta
+        (lease_until = this round, state BEFORE_NAV) — the live analog of
+        listAndLockHead (request-queue.ts:228-298). A second writer at the
+        same round sees the lease as unexpired and cannot re-claim; a crash
+        after this commit resumes at round_id+1 where the lease has expired
+        by round-number comparison and the rows are re-claimed — no unlock
+        protocol. This is also the round-start commit (the round counter
+        advances here, the outcome delta completes the round)."""
         leased = (
             claimed.withColumn("lease_until", F.lit(round_id).cast("long"))
             .withColumn("state", F.lit(STATE_BEFORE_NAV))
@@ -553,80 +637,51 @@ class CrawlEngine:
         )
         self.store.commit_delta(leased, round_increment=True)
 
-        # ---- fetch = join against pages (left: missing page ⇒ fetch error);
-        # the claim urls broadcast-semi-join prunes the corpus scan (see
+    def _fetch_classify(
+        self, claimed: DataFrame, n_claimed: int, claim_url_bytes: int
+    ) -> DataFrame:
+        """Fetch + classify phase (lazy): the claim joined to its pages and
+        the robots re-check, with each row's ``_outcome`` and ``_error``
+        (the C4 decision table)."""
+        # fetch = join against pages (left: missing page ⇒ fetch error); the
+        # claim urls broadcast-semi-join prunes the corpus scan (see
         # fetch_join) so the pages store is never shuffled
         fetched = fetch_join(
             claimed,
             self._pages,
             prune_pages=self._prune_fetch and fits_broadcast(n_claimed, claim_url_bytes),
         )
-
-        # ---- robots re-check at fetch time (basic-crawler.ts:1627-1639)
-        if self.robots is not None:
-            from crawlee_spark.functions.robots import robots_allowed_udf
-
-            fetched = (
-                fetched.join(self._robots, "host", "left")
-                .withColumn("_robots_ok", robots_allowed_udf("url", "robots_txt"))
-                .drop("robots_txt")
-            )
-        else:
-            fetched = fetched.withColumn("_robots_ok", F.lit(True))
-
-        # ---- outcome classification (C4 decision table)
-        mime_ok = F.lit(False)
-        for m in SUPPORTED_MIME + tuple(self.options.additional_mime_types):
-            mime_ok = mime_ok | F.col("content_type").startswith(m)
-        can_retry = F.col("retry_count") < F.coalesce(
-            F.col("max_retries"), F.lit(self.options.max_request_retries)
-        )
+        # robots re-check at fetch time (basic-crawler.ts:1627-1639)
+        fetched = self._with_robots_verdict(fetched, F.col("host"))
         # F2: post-load strategy re-check against the final (redirected) URL
-        from crawlee_spark.operators.enqueue import matches_enqueue_strategy_col
-
         strategy_ok = matches_enqueue_strategy_col("url", "loaded_url", "enqueue_strategy")
-        # request.skipNavigation (request.ts:268-277: stored in
-        # userData.__crawlee.skipNavigation — same wire format here): the
-        # fetch outcome is ignored entirely (http-crawler.ts:519 skips
-        # navigation, response parsing, blocked/status gating and the
-        # redirect re-check) and the request goes straight to the handler
-        # stage as a success with no parsed body. The robots re-check still
-        # applies — it runs before _runRequestHandler in the reference.
-        skip_nav = F.coalesce(
-            F.get_json_object(F.col("user_data"), "$.__crawlee.skipNavigation").cast(
-                "boolean"
-            ),
-            F.lit(False),
-        )
-        classified = fetched.withColumn(
+        retry_or_fail = self._retry_or_fail()
+        # skipNavigation: the fetch outcome is ignored entirely
+        # (http-crawler.ts:519 skips navigation, response parsing,
+        # blocked/status gating and the redirect re-check) and the request
+        # goes straight to the handler stage as a success with no parsed
+        # body. The robots re-check still applies — it runs before
+        # _runRequestHandler in the reference.
+        return fetched.withColumn(
             "_outcome",
             F.when(~F.col("_robots_ok"), F.lit("skip_robots"))
-            .when(skip_nav, F.lit("success"))
+            .when(_skip_nav(), F.lit("success"))
             .when(
                 # blocked statuses BEFORE the redirect-strategy recheck:
                 # _throwOnBlockedRequest (http-crawler.ts:547) fires before
                 # requestMatchesEnqueueStrategy (:556) — a redirect landing on
                 # 401/403/429 session-rotates, it is not permanently SKIPPED
                 F.col("status_code").isin(*BLOCKED_STATUS_CODES),
-                F.when(
-                    F.col("session_rotation_count") < self.options.max_session_rotations,
-                    F.lit("session_retry"),
-                ).otherwise(F.when(can_retry & ~F.col("no_retry"), F.lit("retry")).otherwise(F.lit("fail"))),
+                self._rotate_or_retry(),
             )
             .when(
                 F.col("html").isNotNull() & ~strategy_ok, F.lit("skip_redirect")
             )  # basic-crawler.ts:2124-2168 / http-crawler.ts:556-568: noRetry,
             #    state SKIPPED, reason 'redirect', still marked handled
-            .when(
-                F.col("html").isNull() | (F.col("status_code") >= 500),
-                F.when(can_retry & ~F.col("no_retry"), F.lit("retry")).otherwise(F.lit("fail")),
-            )
-            .when((F.col("status_code") >= 400) | ~mime_ok, F.lit("fail"))  # non-retryable
-            .when(
-                # C7: handler over budget ⇒ retryable TimeoutError
-                self._handler_timeout_pred(),
-                F.when(can_retry & ~F.col("no_retry"), F.lit("retry")).otherwise(F.lit("fail")),
-            )
+            .when(F.col("html").isNull() | (F.col("status_code") >= 500), retry_or_fail)
+            .when((F.col("status_code") >= 400) | ~self._mime_ok(), F.lit("fail"))  # non-retryable
+            # C7: handler over budget ⇒ retryable TimeoutError
+            .when(self._handler_timeout_pred(), retry_or_fail)
             .otherwise(F.lit("success")),
         ).withColumn(
             "_error",
@@ -646,26 +701,31 @@ class CrawlEngine:
             )
             .otherwise(F.concat(F.lit("Request failed with status "), F.col("status_code"))),
         )
-        # ---- fused single-parse extraction over preliminary successes.
-        # One DOM parse yields text (E2, charset-decoded per E6), links (E1,
-        # resolved against the redirect-final URL) and the RETRY_CSS_SELECTORS
-        # probe (E9): a 200 carrying a challenge page is reclassified as a
-        # session error exactly like a blocked status code
-        # (isRequestBlocked, http-crawler.ts:600-614 → SessionError path).
-        # One projection, one Python pass: the parse reads the html of a
-        # JVM-only superset of the successes (``pre_ok`` uses no UDF output,
-        # so Spark runs the parse in the same Arrow node as the robots and
-        # strategy UDFs) and the exact success mask is applied to its
-        # outputs. Filtering on ``_outcome`` instead would re-run those UDFs,
-        # and success/rest branches would plan the fetch join twice.
-        # ``pre_ok`` mirrors the classifier's non-retryable fail branch
-        # null-safely: a null status_code or content_type makes that branch
-        # null, not true, so such a row still ends as a success and needs its
-        # page parsed.
+
+    def _extract(self, classified: DataFrame) -> DataFrame:
+        """Extract phase: the fused single-parse extraction over the
+        preliminary successes, pinned as the round frame.
+
+        One DOM parse yields text (E2, charset-decoded per E6), links (E1,
+        resolved against the redirect-final URL) and the RETRY_CSS_SELECTORS
+        probe (E9): a 200 carrying a challenge page is reclassified as a
+        session error exactly like a blocked status code
+        (isRequestBlocked, http-crawler.ts:600-614 → SessionError path).
+        One projection, one Python pass: the parse reads the html of a
+        JVM-only superset of the successes (``pre_ok`` uses no UDF output,
+        so Spark runs the parse in the same Arrow node as the robots and
+        strategy UDFs) and the exact success mask is applied to its
+        outputs. Filtering on ``_outcome`` instead would re-run those UDFs,
+        and success/rest branches would plan the fetch join twice.
+        ``pre_ok`` mirrors the classifier's non-retryable fail branch
+        null-safely: a null status_code or content_type makes that branch
+        null, not true, so such a row still ends as a success and needs its
+        page parsed."""
+        skip_nav = _skip_nav()
         pre_ok = (
             F.col("html").isNotNull()
             & ~skip_nav
-            & ~F.coalesce((F.col("status_code") >= 400) | ~mime_ok, F.lit(False))
+            & ~F.coalesce((F.col("status_code") >= 400) | ~self._mime_ok(), F.lit(False))
         )
         extracted_ok = (F.col("_outcome") == "success") & ~skip_nav
         page = extract_page_udf(
@@ -693,15 +753,7 @@ class CrawlEngine:
         is_blocked_page = F.coalesce(F.size("_blocked_sel") > 0, F.lit(False))
         ext = ext.withColumn(
             "_outcome",
-            F.when(
-                is_blocked_page,
-                F.when(
-                    F.col("session_rotation_count") < self.options.max_session_rotations,
-                    F.lit("session_retry"),
-                ).otherwise(
-                    F.when(can_retry & ~F.col("no_retry"), F.lit("retry")).otherwise(F.lit("fail"))
-                ),
-            ).otherwise(F.col("_outcome")),
+            F.when(is_blocked_page, self._rotate_or_retry()).otherwise(F.col("_outcome")),
         ).withColumn(
             "_error",
             F.when(
@@ -712,9 +764,6 @@ class CrawlEngine:
                 ),
             ).otherwise(F.col("_error")),
         )
-        # raw bodies and probe scratch never outlive extraction: drop them so
-        # the checkpointed round frame is narrow — at a 512k-claim round the
-        # html column alone would pin tens of GB of executor storage
         if self.options.save_error_snapshots:
             # opt-in ErrorSnapshotter path: the snapshot capture needs the
             # bodies of errored rows, so pin the WIDE frame once (the
@@ -722,31 +771,34 @@ class CrawlEngine:
             # fall through to the usual narrow checkpoint. The extra wide
             # pin is this feature's documented cost, mirroring the
             # reference's own snapshot-write overhead.
-            wide = ext.localCheckpoint(eager=True)
-            self._save_error_snapshots(wide)
-            classified = wide.drop("html", "_blocked_sel").localCheckpoint(eager=True)
-        else:
-            classified = ext.drop("html", "_blocked_sel").localCheckpoint(eager=True)
-        # ---- user hooks AFTER the extraction checkpoint (their plans — and
-        # the router's no-route probe — must never recompute the extraction
-        # UDF) but BEFORE the round aggregate, so their reclassifications
-        # (handler throw -> retry, errorHandler noRetry -> fail) land in the
-        # counters and the outcome merge for free. A second narrow
-        # checkpoint pins the hook outputs; rounds without hooks keep the
-        # single-checkpoint plan unchanged.
+            ext = ext.localCheckpoint(eager=True)
+            self._save_error_snapshots(ext)
+        # raw bodies and probe scratch never outlive extraction: drop them so
+        # the checkpointed round frame is narrow — at a 512k-claim round the
+        # html column alone would pin tens of GB of executor storage
+        return ext.drop("html", "_blocked_sel").localCheckpoint(eager=True)
+
+    def _run_hooks(self, classified: DataFrame) -> DataFrame:
+        """Hooks phase: user hooks AFTER the extraction checkpoint (their
+        plans — and the router's no-route probe — must never recompute the
+        extraction UDF) but BEFORE the round aggregate, so their
+        reclassifications (handler throw -> retry, errorHandler noRetry ->
+        fail) land in the counters and the outcome merge for free. A second
+        narrow checkpoint pins the hook outputs; rounds without hooks keep
+        the single-checkpoint plan unchanged."""
         if self.options.handlers:
-            classified = self._apply_request_handlers(classified, can_retry)
+            classified = self._apply_request_handlers(classified)
         if self.options.error_handler is not None:
             classified = self._apply_error_handler(classified)
         if self.options.handlers or self.options.error_handler is not None:
             classified = classified.localCheckpoint(eager=True)
+        return classified
 
-        # ---- ONE O(claimed) aggregate feeds everything driver-side this
-        # round needs: per-outcome counts (metrics + O(1) counter deltas),
-        # the discovered-link total, and the reclaim re-sequencing range —
-        # previously three separate jobs over the same checkpointed frame.
-        from crawlee_spark.operators.handlers import ENQUEUE_URLS_COL
-
+    def _round_aggregate(self, classified: DataFrame) -> tuple[dict, int, int, int, int]:
+        """Round aggregate phase: ONE O(claimed) aggregate feeds everything
+        driver-side this round needs — per-outcome counts (metrics + O(1)
+        counter deltas), the discovered and handler-emitted link totals, and
+        the reclaim re-sequencing range ``(r_lo, r_span)``."""
         emitted_sz = (
             F.sum(F.size(F.coalesce(F.col(ENQUEUE_URLS_COL), F.array())))
             if self._handler_emits
@@ -771,37 +823,160 @@ class CrawlEngine:
         r_lo = min((int(r["lo"]) for r in reclaim_rows), default=0)
         r_hi = max((int(r["hi"]) for r in reclaim_rows), default=0)
         r_span = (r_hi - r_lo + 1) if n_reclaims else 0
+        return cnts, n_links, n_emitted, r_lo, r_span
 
-        # skip side-outputs (F8 handleSkippedRequest): redirect-strategy skips
-        # (reason 'redirect') and fetch-time robots skips (reason 'robotsTxt',
-        # basic-crawler.ts:1626-1638 — SKIPPED + handled, never failed)
-        (
-            classified.filter(F.col("_outcome").isin("skip_redirect", "skip_robots"))
-            .select(
-                "url",
-                F.when(F.col("_outcome") == "skip_robots", F.lit("robotsTxt"))
-                .otherwise(F.lit("redirect"))
-                .alias("reason"),
-                F.lit(round_id).alias("round_id"),
-            )
-            .write.mode("append")
-            .parquet(self.skipped_dir)
+    def _enqueue(
+        self, classified: DataFrame, n_found: int, n_claimed: int
+    ) -> tuple[DataFrame | None, int, DataFrame | None]:
+        """Enqueue phase: discovered links (extracted + handler-emitted) →
+        gate → dedup. Returns the fresh frontier rows (pinned by
+        ``prepare_fresh``), how many there are, and the gate's skipped
+        ``(url, reason)`` frame — ``(None, 0, None)`` when the round found no
+        links."""
+        if not n_found:
+            return None, 0, None
+        links = self._link_candidates(classified.filter(F.col("_outcome") == "success"), n_claimed)
+        # ONE Python pass over the discovered links, pinned: the robots
+        # verdict (F5) and the URL_KEY_COLS. The skipped write, the gates
+        # and prepare_fresh read the pin, so none of them re-runs a UDF.
+        links = with_url_keys(self._with_robots_verdict(links, host_col("url"))).localCheckpoint(
+            eager=True
         )
+        accepted, skipped = self._gate_links(links)
+        # deterministic arrival order: (parent rank in this round, position
+        # on page). 32-bit stride: parent rank is bounded by the per-round
+        # claim (max_concurrency < 2^31) and no real page yields 2^32
+        # links, so the key is collision-free and far from long overflow —
+        # uniqueness is load-bearing (sparse order_no assignment and the
+        # abs(order_no) reclaim re-sequencing both assume it).
+        accepted = accepted.withColumn(
+            "_arrival",
+            F.shiftleft(F.col("_parent_rank").cast("long"), 32) + F.col("_pos"),
+        ).drop("_parent_rank", "_pos", "_robots_ok", "origin_label")
+        budget = self._remaining_budget()
+        limit = self.options.enqueue.limit
+        if limit is not None:
+            budget = limit if budget is None else min(budget, limit)
+        carry = [
+            c for c in ("label", "user_data", "method", "payload")
+            if c in accepted.columns  # F3 per-pattern / base-label overrides
+        ]
+        total_before = self.store._manifest["total_requests"]
+        # prepare_fresh shapes the survivors into frontier rows itself, so
+        # the dedup shuffle carries only the candidates' own columns
+        fresh_rows = self.store.prepare_fresh(
+            accepted.select(
+                # enqueue_strategy stamped per gate segment (recorded for F2)
+                "url", "crawl_depth", "_arrival", "enqueue_strategy", *URL_KEY_COLS,
+                *carry,
+            ),
+            max_new=budget,
+        )
+        # prepare_fresh already counted the survivors into the manifest —
+        # no extra job for the metric
+        return fresh_rows, self.store._manifest["total_requests"] - total_before, skipped
 
-        # successes (post-probe) already carry extracted text + links
-        extracted = classified.filter(F.col("_outcome") == "success")
+    def _link_candidates(self, extracted: DataFrame, n_claimed: int) -> DataFrame:
+        """One row per discovered link of the round's successes: the origin
+        page's url, label and parent rank, the link's depth and its position
+        ``_pos`` on the page."""
+        # parent rank: dense 1..|succ| by order_no. Two-phase global rank
+        # (range-partition + per-partition row_number + offsets) over the
+        # NARROW (order_no) projection — an unpartitioned window here
+        # would funnel the whole html-bearing frame through ONE task at a
+        # 512k-claim round — then broadcast-joined back on the unique
+        # order_no (≤ max_concurrency rows, trivially broadcastable).
+        ranks = global_row_number(
+            extracted.select("order_no"),
+            "order_no",
+            col_name="_parent_rank",
+            partitions=self.store.num_partitions,
+            # n_claimed bounds the success count: small rounds keep the
+            # rank a lazy narrow window (no extra jobs), big rounds go
+            # two-phase — the single task would otherwise sort the round
+            approx_rows=n_claimed,
+        )
+        ranked = extracted.join(F.broadcast(ranks), "order_no")
+        origin = [
+            F.col("url").alias("origin_url"),
+            F.col("label").alias("origin_label"),
+            F.col("_parent_rank"),
+            (F.col("crawl_depth") + 1).alias("crawl_depth"),
+        ]
+        if not self._handler_emits:
+            links = ranked.select(*origin, F.posexplode_outer("_links").alias("_pos", "url"))
+            return links.filter(F.col("url").isNotNull())
+        # handler-emitted urls (context.addRequests / enqueueLinks
+        # ({urls}), basic-crawler.ts:1651-1672) append AFTER the
+        # page's extracted links in ONE candidate array, so a single
+        # posexplode yields gap-free per-page positions and the
+        # (_parent_rank << 32) + _pos arrival key stays unique and
+        # deterministic across both sources. Per-row enqueue_label /
+        # enqueue_user_data stamp every url that row emitted.
+        null_s = F.lit(None).cast("string")
+        empty = F.array().cast("array<string>")
 
-        # results dataset append (S7) — plus any extra columns the user's
+        def emitted(c: str) -> Column:
+            return F.col(c) if c in self._handler_enqueue_cols else null_s
+
+        def cands(urls: str, label: Column, user_data: Column) -> Column:
+            return F.transform(
+                F.coalesce(F.col(urls), empty),
+                lambda u: F.struct(
+                    u.alias("url"), label.alias("label"), user_data.alias("user_data")
+                ),
+            )
+
+        cand_arr = F.concat(
+            cands("_links", null_s, null_s),
+            cands(ENQUEUE_URLS_COL, emitted(ENQUEUE_LABEL_COL), emitted(ENQUEUE_USER_DATA_COL)),
+        )
+        links = (
+            ranked.select(*origin, F.posexplode_outer(cand_arr).alias("_pos", "_cand"))
+            .withColumns(
+                {
+                    "url": F.col("_cand.url"),
+                    "label": F.col("_cand.label"),
+                    "user_data": F.col("_cand.user_data"),
+                }
+            )
+            .drop("_cand")
+        )
+        return links.filter(F.col("url").isNotNull())
+
+    def _write_side_outputs(
+        self, classified: DataFrame, gate_skipped: DataFrame | None, round_id: int
+    ) -> None:
+        """Side outputs phase: the round's skipped, results, failed-handler
+        and outcome-log appends, and the proxy and session state."""
+        # skip side-output (F8 handleSkippedRequest), ONE append per round:
+        # redirect-strategy skips (reason 'redirect') and fetch-time robots
+        # skips (reason 'robotsTxt', basic-crawler.ts:1626-1638 — SKIPPED +
+        # handled, never failed), plus the link gate's rejections
+        skipped = classified.filter(F.col("_outcome").isin("skip_redirect", "skip_robots")).select(
+            "url",
+            F.when(F.col("_outcome") == "skip_robots", F.lit("robotsTxt"))
+            .otherwise(F.lit("redirect"))
+            .alias("reason"),
+        )
+        if gate_skipped is not None:
+            skipped = skipped.unionByName(gate_skipped)
+        skipped.withColumn("round_id", F.lit(round_id)).write.mode("append").parquet(
+            self.skipped_dir
+        )
+        # results dataset append (S7) of the successes, which already carry
+        # extracted text + links — plus any extra columns the user's
         # per-label handlers produced (the requestHandler's pushData analog)
         (
-            extracted.select(
+            classified.filter(F.col("_outcome") == "success")
+            .select(
                 "request_id",
                 "url",
                 # request.loadedUrl = response.url (redirect-aware final URL);
                 # skipNavigation rows never navigated, so loadedUrl stays
                 # unset in the results too (request.ts:268-277 — the round
                 # frame already nulled it, and the coalesce must not refill)
-                F.when(skip_nav, F.lit(None).cast("string"))
+                F.when(_skip_nav(), F.lit(None).cast("string"))
                 .otherwise(F.coalesce(F.col("loaded_url"), F.col("url")))
                 .alias("loaded_url"),
                 F.col("extracted_text").alias("text"),
@@ -817,163 +992,17 @@ class CrawlEngine:
         # already carrying the final error (basic-crawler.ts:1953-1965)
         if self.options.failed_request_handler is not None:
             self._apply_failed_handler(classified, round_id)
-
-        # ---- discovered links (extracted + handler-emitted) → gate → enqueue
-        new_enqueued = 0
-        fresh_rows = None
-        if n_links or n_emitted:
-            # parent rank: dense 1..|succ| by order_no. Two-phase global rank
-            # (range-partition + per-partition row_number + offsets) over the
-            # NARROW (order_no) projection — an unpartitioned window here
-            # would funnel the whole html-bearing frame through ONE task at a
-            # 512k-claim round — then broadcast-joined back on the unique
-            # order_no (≤ max_concurrency rows, trivially broadcastable).
-            ranks = global_row_number(
-                extracted.select("order_no"),
-                "order_no",
-                col_name="_parent_rank",
-                partitions=self.store.num_partitions,
-                # n_claimed bounds the success count: small rounds keep the
-                # rank a lazy narrow window (no extra jobs), big rounds go
-                # two-phase — the single task would otherwise sort the round
-                approx_rows=n_claimed,
-            )
-            if self._handler_emits:
-                # handler-emitted urls (context.addRequests / enqueueLinks
-                # ({urls}), basic-crawler.ts:1651-1672) append AFTER the
-                # page's extracted links in ONE candidate array, so a single
-                # posexplode yields gap-free per-page positions and the
-                # (_parent_rank << 32) + _pos arrival key stays unique and
-                # deterministic across both sources. Per-row enqueue_label /
-                # enqueue_user_data stamp every url that row emitted.
-                from crawlee_spark.operators.handlers import (
-                    ENQUEUE_LABEL_COL,
-                    ENQUEUE_USER_DATA_COL,
-                )
-
-                null_s = F.lit(None).cast("string")
-                e_lbl = (
-                    F.col(ENQUEUE_LABEL_COL)
-                    if ENQUEUE_LABEL_COL in self._handler_enqueue_cols
-                    else null_s
-                )
-                e_ud = (
-                    F.col(ENQUEUE_USER_DATA_COL)
-                    if ENQUEUE_USER_DATA_COL in self._handler_enqueue_cols
-                    else null_s
-                )
-                empty = F.array().cast("array<string>")
-                cand_arr = F.concat(
-                    F.transform(
-                        F.coalesce(F.col("_links"), empty),
-                        lambda u: F.struct(
-                            u.alias("url"), null_s.alias("label"), null_s.alias("user_data")
-                        ),
-                    ),
-                    F.transform(
-                        F.coalesce(F.col(ENQUEUE_URLS_COL), empty),
-                        lambda u: F.struct(
-                            u.alias("url"), e_lbl.alias("label"), e_ud.alias("user_data")
-                        ),
-                    ),
-                )
-                links = (
-                    extracted.join(F.broadcast(ranks), "order_no")
-                    .select(
-                        F.col("url").alias("origin_url"),
-                        F.col("label").alias("origin_label"),
-                        F.col("_parent_rank"),
-                        (F.col("crawl_depth") + 1).alias("crawl_depth"),
-                        F.posexplode_outer(cand_arr).alias("_pos", "_cand"),
-                    )
-                    .withColumns(
-                        {
-                            "url": F.col("_cand.url"),
-                            "label": F.col("_cand.label"),
-                            "user_data": F.col("_cand.user_data"),
-                        }
-                    )
-                    .drop("_cand")
-                    .filter(F.col("url").isNotNull())
-                )
-            else:
-                links = (
-                    extracted.join(F.broadcast(ranks), "order_no")
-                    .select(
-                        F.col("url").alias("origin_url"),
-                        F.col("label").alias("origin_label"),
-                        F.col("_parent_rank"),
-                        (F.col("crawl_depth") + 1).alias("crawl_depth"),
-                        F.posexplode_outer("_links").alias("_pos", "url"),
-                    )
-                    .filter(F.col("url").isNotNull())
-                )
-            # ONE Python pass over the discovered links, pinned: the robots
-            # verdict (F5) and the URL_KEY_COLS. The skipped write, the gates
-            # and prepare_fresh read the pin, so none of them re-runs a UDF.
-            if self.robots is not None:
-                from crawlee_spark.functions.robots import robots_allowed_udf
-
-                links = links.join(
-                    self._robots.withColumnRenamed("host", "_rhost"),
-                    F.lower(F.try_parse_url("url", F.lit("HOST"))) == F.col("_rhost"),
-                    "left",
-                ).drop("_rhost")
-                robots_ok = robots_allowed_udf("url", "robots_txt")
-            else:
-                robots_ok = F.lit(True)
-            links = (
-                with_url_keys(links.withColumn("_robots_ok", robots_ok))
-                .drop("robots_txt")
-                .localCheckpoint(eager=True)
-            )
-            accepted, skipped = self._gate_links(links)
-            skipped.withColumn("round_id", F.lit(round_id)).write.mode("append").parquet(self.skipped_dir)
-            # deterministic arrival order: (parent rank in this round, position
-            # on page). 32-bit stride: parent rank is bounded by the per-round
-            # claim (max_concurrency < 2^31) and no real page yields 2^32
-            # links, so the key is collision-free and far from long overflow —
-            # uniqueness is load-bearing (sparse order_no assignment and the
-            # abs(order_no) reclaim re-sequencing both assume it).
-            accepted = accepted.withColumn(
-                "_arrival",
-                F.shiftleft(F.col("_parent_rank").cast("long"), 32) + F.col("_pos"),
-            ).drop("_parent_rank", "_pos", "_robots_ok", "origin_label")
-            budget = self._remaining_budget()
-            limit = self.options.enqueue.limit
-            if limit is not None:
-                budget = limit if budget is None else min(budget, limit)
-            carry = [
-                c for c in ("label", "user_data", "method", "payload")
-                if c in accepted.columns  # F3 per-pattern / base-label overrides
-            ]
-            total_before = self.store._manifest["total_requests"]
-            # prepare_fresh shapes the survivors into frontier rows itself, so
-            # the dedup shuffle carries only the candidates' own columns
-            fresh_rows = self.store.prepare_fresh(
-                accepted.select(
-                    # enqueue_strategy stamped per gate segment (recorded for F2)
-                    "url", "crawl_depth", "_arrival", "enqueue_strategy", *URL_KEY_COLS,
-                    *carry,
-                ),
-                max_new=budget,
-            )
-            # prepare_fresh already counted the survivors into the manifest —
-            # no extra job for the metric
-            new_enqueued = self.store._manifest["total_requests"] - total_before
-
-        # ---- outcomes log append. Robots skips never reach the log: the
+        # outcomes log append. Robots skips never reach the log: the
         # reference returns BEFORE stats.startJob (basic-crawler.ts:1626-1638),
         # so they appear in no Statistics series — only in the skipped
         # side-output and the queue's handled count.
-        attempt_rows = classified.filter(F.col("_outcome") != "skip_robots").select(
+        logged = classified.filter(F.col("_outcome") != "skip_robots")
+        logged.select(
             "request_id",
             "url",
             F.lit(round_id).alias("round_id"),
             F.col("retry_count").alias("attempt"),
-            F.when(F.col("_outcome") == "skip_redirect", F.lit("success"))  # handled+finished
-            .otherwise(F.col("_outcome"))
-            .alias("outcome"),
+            _logged_outcome(),
             F.col("status_code").cast("int").alias("status_code"),
             (F.lit(10) + F.pmod(F.xxhash64("request_id", F.lit(round_id)), F.lit(90))).alias("duration_ms"),
             F.col("_error").alias("error_message"),
@@ -985,8 +1014,7 @@ class CrawlEngine:
                 if self.options.proxy_config is not None
                 else []
             ),
-        )
-        attempt_rows.write.mode("append").parquet(self.outcomes_dir)
+        ).write.mode("append").parquet(self.outcomes_dir)
         if self.options.proxy_config is not None and getattr(
             self.options.proxy_config, "tiered_proxy_urls", ()
         ):
@@ -996,52 +1024,43 @@ class CrawlEngine:
             # Set-Cookie headers (array<string> ``set_cookie``), each
             # session's jar absorbs this round's cookies in request order
             # (session.ts:341-345) and persists with the pool.
-            outcome_expr = (
-                F.when(F.col("_outcome") == "skip_redirect", F.lit("success"))
-                .otherwise(F.col("_outcome"))
-                .alias("outcome")
-            )
-            sess_cols = [F.col("session_id"), outcome_expr]
+            sess_cols = [F.col("session_id"), _logged_outcome()]
             kw = {}
             if "set_cookie" in classified.columns:
                 sess_cols += [F.col("set_cookie"), F.abs(F.col("order_no")).alias("_ord")]
                 kw = {"cookie_col": "set_cookie", "order_col": "_ord"}
-            self._update_sessions(
-                classified.filter(F.col("_outcome") != "skip_robots").select(*sess_cols),
-                round_id,
-                **kw,
-            )
+            self._update_sessions(logged.select(*sess_cols), round_id, **kw)
 
-        # ---- O(1) counter maintenance from the fused round aggregate:
-        # the manifest's handled/failed totals advance atomically with the
-        # outcome delta below. Monitoring and budgets read these counters
-        # instead of scanning the frontier.
-        # skip_robots increments handled (markRequestHandled) but NOT failed:
-        # the reference treats a fetch-time robots skip as handled-skipped,
-        # never as a failed request (basic-crawler.ts:1626-1638)
+    def _commit_outcomes(
+        self,
+        classified: DataFrame,
+        fresh_rows: DataFrame | None,
+        cnts: dict,
+        r_lo: int,
+        r_span: int,
+        round_id: int,
+    ) -> None:
+        """Outcome commit phase: MERGE outcomes back into the frontier +
+        append fresh links. The touched set is just the claimed rows' new
+        versions + fresh rows, and that is ALL the outcome delta writes
+        (O(claimed+fresh) per round); the lease delta already advanced the
+        round counter.
+
+        O(1) counter maintenance from the round aggregate: the manifest's
+        handled/failed totals advance atomically with the outcome delta.
+        Monitoring and budgets read these counters instead of scanning the
+        frontier. skip_robots increments handled (markRequestHandled) but
+        NOT failed: the reference treats a fetch-time robots skip as
+        handled-skipped, never as a failed request
+        (basic-crawler.ts:1626-1638)."""
         handled_inc = sum(cnts.get(o, 0) for o in ("success", "skip_redirect", "fail", "skip_robots"))
-        failed_inc = cnts.get("fail", 0)
         counter_extra = {
             "handled_total": self.store._manifest["handled_total"] + handled_inc,
-            "failed_total": self.store._manifest["failed_total"] + failed_inc,
+            "failed_total": self.store._manifest["failed_total"] + cnts.get("fail", 0),
         }
-
-        # ---- MERGE outcomes back into the frontier + append fresh links.
-        # The touched set is just the claimed rows' new versions + fresh rows,
-        # and that is ALL the outcome delta writes (O(claimed+fresh) per
-        # round); the lease delta already advanced the round counter.
         updated = self._outcome_rows(classified, round_id, r_lo, r_span)
         delta = updated if fresh_rows is None else updated.unionByName(fresh_rows)
         self.store.commit_delta(delta, extra=counter_extra)
-
-        return {
-            "round": round_id,
-            "claimed": n_claimed,
-            "succeeded": cnts.get("success", 0),
-            "links_found": n_links,
-            "enqueued": new_enqueued,
-            "done": False,
-        }
 
     def _outcome_rows(
         self, classified: DataFrame, round_id: int, r_lo: int, r_span: int
@@ -1094,13 +1113,7 @@ class CrawlEngine:
                     F.col("session_rotation_count")
                 ),
             )
-            .withColumn(
-                "error_messages",
-                F.when(
-                    (is_reclaim | is_fail) & F.col("_error").isNotNull(),
-                    F.concat(F.coalesce(F.col("error_messages"), F.array()), F.array(F.col("_error"))),
-                ).otherwise(F.col("error_messages")),
-            )
+            .withColumn("error_messages", _push_error(F.col("_error"), is_reclaim | is_fail))
             .withColumn(
                 "order_no",
                 F.when(
@@ -1170,13 +1183,11 @@ class CrawlEngine:
         return acc, skip
 
     # -- user hooks (C13 Router dispatch + error hooks) ----------------------
-    def _apply_request_handlers(self, classified: DataFrame, can_retry) -> DataFrame:
+    def _apply_request_handlers(self, classified: DataFrame) -> DataFrame:
         """Dispatch the round's successes to their label's handler
         (router.ts:315-329) and fold the results back: extra columns flow to
         the results dataset; a handler THROW reclassifies that request as
         retryable exactly like a fetch error (basic-crawler.ts:1880-1941)."""
-        from crawlee_spark.operators.handlers import apply_request_handlers
-
         succ = classified.filter(F.col("_outcome") == "success").withColumn(
             "links", F.col("_links")
         )
@@ -1187,10 +1198,7 @@ class CrawlEngine:
             joined.withColumn(
                 "_outcome",
                 F.when(
-                    (F.col("_outcome") == "success") & err.isNotNull(),
-                    F.when(can_retry & ~F.col("no_retry"), F.lit("retry")).otherwise(
-                        F.lit("fail")
-                    ),
+                    (F.col("_outcome") == "success") & err.isNotNull(), self._retry_or_fail()
                 ).otherwise(F.col("_outcome")),
             )
             .withColumn("_error", F.when(err.isNotNull(), err).otherwise(F.col("_error")))
@@ -1203,12 +1211,6 @@ class CrawlEngine:
         already pushed and may mutate user_data / no_retry / max_retries /
         forefront / label; a flipped no_retry converts the retry into a
         finalized failure (the reference re-checks noRetry AFTER the hook)."""
-        from crawlee_spark.operators.handlers import (
-            ERROR_MUTABLE_COLS,
-            HANDLER_INPUT_COLS,
-            apply_error_handler,
-        )
-
         retryable = classified.filter(F.col("_outcome").isin("retry", "session_retry"))
         in_cols = [c for c in HANDLER_INPUT_COLS if c in classified.columns]
         mut_cols = [c for c, _ in ERROR_MUTABLE_COLS if c in classified.columns]
@@ -1218,13 +1220,7 @@ class CrawlEngine:
         ).withColumn(
             # pushErrorMessage happens BEFORE the hook (basic-crawler.ts:1887)
             "error_messages",
-            F.when(
-                F.col("error_message").isNotNull(),
-                F.concat(
-                    F.coalesce(F.col("error_messages"), F.array()),
-                    F.array(F.col("error_message")),
-                ),
-            ).otherwise(F.col("error_messages")),
+            _push_error(F.col("error_message")),
         )
         muts = apply_error_handler(handler_in, self.options.error_handler)
         muts = muts.select(
@@ -1249,24 +1245,13 @@ class CrawlEngine:
         the round's finalized failures; the input's error_messages carries
         the final error (pushed at the top of the reference's error path).
         Rows the handler returns append to ``<root>/failed_handled``."""
-        from crawlee_spark.operators.handlers import HANDLER_INPUT_COLS
-
         fn = self.options.failed_request_handler
         schema = self.options.failed_handler_schema
         failed = classified.filter(F.col("_outcome") == "fail")
         in_cols = [c for c in HANDLER_INPUT_COLS if c in classified.columns]
         handler_in = failed.select(
             *in_cols, F.col("_error").alias("error_message")
-        ).withColumn(
-            "error_messages",
-            F.when(
-                F.col("error_message").isNotNull(),
-                F.concat(
-                    F.coalesce(F.col("error_messages"), F.array()),
-                    F.array(F.col("error_message")),
-                ),
-            ).otherwise(F.col("error_messages")),
-        )
+        ).withColumn("error_messages", _push_error(F.col("error_message")))
 
         def gen(batches):
             import pandas as pd
@@ -1299,9 +1284,7 @@ class CrawlEngine:
         driver-side observability only — nothing in the data plane (order_no,
         leases, handled_at) ever reads the clock, so resume determinism and
         the oracle compare are untouched."""
-        import time as _time
-
-        t0 = _time.time()
+        t0 = time.time()
         if seeds is not None:
             self.add_seeds(seeds)
         rounds = 0
@@ -1310,12 +1293,9 @@ class CrawlEngine:
             rounds += 1
             if metrics.get("done"):
                 break
-        from crawlee_spark.operators.kvstore import KeyValueStore
-        from crawlee_spark.operators.stats import persist_run_statistics
-
         final = self.final_statistics()
         kv = KeyValueStore(os.path.join(self.store.root, "kv"))
-        state = persist_run_statistics(kv, int((_time.time() - t0) * 1000), final)
+        state = persist_run_statistics(kv, int((time.time() - t0) * 1000), final)
         final["crawlerRuntimeMillis"] = state["crawlerRuntimeMillis"]
         final["crawlerResumeCount"] = state["crawlerResumeCount"]
         return final

@@ -2,7 +2,8 @@
 
 ``capture_actions`` records each ``localCheckpoint``, ``collect``, ``count``
 and parquet write with the program function that took it, its formatted
-plan and its ``ArrowEvalPython`` nodes (the Python passes). The plan pins in
+plan, its ``ArrowEvalPython`` nodes (the Python passes) and, for a write,
+the directory written. The plan pins in
 ``test_plans.py`` count those nodes per crawl round; ``tools/round_plans.py``
 dumps them.
 """
@@ -45,6 +46,7 @@ class Action:
     caller: str  # module.function that took it
     plan: str  # formatted physical plan
     python: list[str]  # its ArrowEvalPython nodes
+    target: str | None = None  # the directory a parquet write writes
 
 
 @contextlib.contextmanager
@@ -68,7 +70,8 @@ def capture_actions():
     def wrap(cls, name, fn):
         def recorded(self, *a, **kw):
             df = self._df if cls is DataFrameWriter else self
-            taken.append(Action(name, _caller(), plan_string(df), python_nodes(df)))
+            target = (a[0] if a else kw.get("path")) if cls is DataFrameWriter else None
+            taken.append(Action(name, _caller(), plan_string(df), python_nodes(df), target))
             return fn(self, *a, **kw)
 
         return recorded

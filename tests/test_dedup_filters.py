@@ -65,3 +65,21 @@ def test_empty_bucket_is_definitely_new(spark):
     cand = spark.createDataFrame([(f"x-{i}",) for i in range(100)], "request_id string")
     out = bloom_anti_join(cand, seen, filters, num_buckets=8)
     assert out.count() == 100
+
+
+def test_bloom_anti_join_probes_once(spark, frames):
+    """Both union branches of ``bloom_anti_join`` (definitely-new and
+    checked) read one pinned probe: the Python cogroup runs exactly once
+    over the candidates, not once per branch."""
+    import re
+
+    from tests.plan_capture import capture_actions
+
+    seen, cand, filters = frames
+    with capture_actions() as taken:
+        out = bloom_anti_join(cand, seen, filters, num_buckets=16).collect()
+    assert len(out) == 1500
+    probes = sum(
+        len(re.findall(r"^\(\d+\) FlatMapCoGroupsInPandas", a.plan, re.M)) for a in taken
+    )
+    assert probes == 1, [a.kind for a in taken]

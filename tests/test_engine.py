@@ -556,6 +556,31 @@ def test_kitchen_sink_integration(spark, tmp_store_dir):
     assert stats["requestsFinished"] >= 2  # start + detail
 
 
+def test_link_gate_robots_keys_on_normalized_host(spark, tmp_store_dir):
+    """A link whose host has a trailing dot (``www.example.com.``) falls under
+    ``www.example.com``'s robots rules at the link gate, as it does at the
+    seed gate and the fetch re-check: a disallowed one is skipped in the
+    round that finds it and never enters the frontier (so it never counts
+    against the request budget)."""
+    blocked = "https://www.example.com./private/x"
+    pages = spark.createDataFrame(
+        [("https://www.example.com/a", f'<a href="{blocked}">x</a>'.encode(), 200, "text/html")],
+        "url string, html binary, status_code int, content_type string",
+    )
+    robots = spark.createDataFrame(
+        [("www.example.com", "User-agent: *\nDisallow: /private\n")],
+        "host string, robots_txt string",
+    )
+    engine = build_engine(spark, tmp_store_dir, pages, robots=robots)
+    engine.add_seeds(spark.createDataFrame([("https://www.example.com/a",)], "url string"))
+    metrics = engine.run_round()
+    assert metrics["links_found"] == 1 and metrics["enqueued"] == 0
+    assert [(s["url"], s["reason"]) for s in engine.skipped().collect()] == [
+        (blocked, "robotsTxt")
+    ]
+    assert [r["url"] for r in engine.store.read().collect()] == ["https://www.example.com/a"]
+
+
 def test_fetch_time_robots_skip_is_skipped_not_failed(spark, tmp_store_dir):
     """A URL that passed the enqueue gate but is disallowed at FETCH time
     (robots rules changed mid-crawl) finalizes as SKIPPED + handled with a

@@ -315,7 +315,7 @@ def test_plain_round_runs_two_python_passes(spark, tmp_path_factory):
     passes: one in the extraction checkpoint (robots re-check, F2 strategy
     PSL lookups, page parse) and one in the pinned link-gating pass (robots
     verdict, normalize, PSL). Every other action of the round — the skipped
-    writes, prepare_fresh, the delta commits — runs in the JVM only. Each
+    write, prepare_fresh, the delta commits — runs in the JVM only. Each
     Python node costs a fixed per-task overhead, so a second evaluation of a
     UDF (a Filter over a UDF-derived column, or union branches re-planning
     the fetch join) is a visible regression here."""
@@ -347,3 +347,47 @@ def test_plain_round_runs_two_python_passes(spark, tmp_path_factory):
     assert (extract.kind, links.kind) == ("localCheckpoint", "localCheckpoint")
     # one branch over the fetch join: no success/rest union re-planning it
     assert "Union" not in extract.plan
+
+
+def test_plain_round_runs_as_named_phases(spark, tmp_path_factory):
+    """``run_round`` drives one method per phase, in order: claim → lease
+    commit → fetch + classify → extract → round aggregate → enqueue → side
+    outputs → outcome commit (a plain round has no hooks phase actions, and
+    fetch + classify is lazy: its plan runs in the extraction checkpoint).
+    Every action a plain round with robots takes is pinned to its phase;
+    ``skipped/`` is written once per round (fetch-time and link-gate skips
+    in one append), and the round still runs exactly 2 Python passes."""
+    from crawlee_spark.operators.engine import CrawlEngine, CrawlOptions
+    from crawlee_spark.sources.fixtures import make_pages, make_pages_rows, make_robots, make_seeds
+    from tests.plan_capture import capture_actions
+
+    store = FrontierStore(spark, str(tmp_path_factory.mktemp("plans-phases")), num_partitions=4)
+    engine = CrawlEngine(
+        spark,
+        store,
+        make_pages(spark, 40),
+        robots=make_robots(spark),
+        policy=PolitenessPolicy(max_concurrency=50, per_host_cap=10, salt_buckets=4),
+        options=CrawlOptions(),
+    )
+    engine.add_seeds(make_seeds(spark, make_pages_rows(40)))
+    with capture_actions() as taken:
+        metrics = engine.run_round()
+    assert metrics["links_found"] > 0 and metrics["enqueued"] > 0
+    assert [(a.kind, a.caller) for a in taken] == [
+        ("localCheckpoint", "engine._claim"),
+        ("collect", "engine._claim"),
+        ("parquet", "frontier.commit_delta"),  # the lease delta
+        ("localCheckpoint", "engine._extract"),
+        ("collect", "engine._round_aggregate"),
+        ("localCheckpoint", "engine._enqueue"),  # the link pin
+        ("localCheckpoint", "frontier.prepare_fresh"),
+        ("collect", "frontier.prepare_fresh"),
+        ("parquet", "engine._write_side_outputs"),  # skipped
+        ("parquet", "engine._write_side_outputs"),  # results
+        ("parquet", "engine._write_side_outputs"),  # outcomes
+        ("parquet", "frontier.commit_delta"),  # the outcome delta
+    ]
+    writes = [a.target for a in taken if a.kind == "parquet" and a.caller.startswith("engine.")]
+    assert writes == [engine.skipped_dir, engine.results_dir, engine.outcomes_dir]
+    assert sum(len(a.python) for a in taken) == 2

@@ -7,8 +7,8 @@ and robots table, ``CRAWL_POLICY``, enqueue strategy ``all``,
 ``compact_every=CRAWL_COMPACT_EVERY``) and runs ``--rounds``
 ``CrawlEngine.run_round`` calls. Every Spark action a round takes
 (``localCheckpoint``, ``collect``, ``count``, parquet write) is recorded
-with the caller that took it and its physical plan
-(``tests/plan_capture.py``):
+with the caller that took it, the directory a write writes, and its
+physical plan (``tests/plan_capture.py``):
 
 - ``crawl_round<R>_actions.txt``: each action's formatted plan, in order;
 - ``crawl_round<R>_python.txt``: each action's ``ArrowEvalPython`` nodes
@@ -72,7 +72,7 @@ def dump_crawl(spark, out: str, seed: int, rounds: int) -> None:
             plans, python = [], []
             total = 0
             for i, a in enumerate(taken):
-                head = f"## {i:02d} {a.kind} in {a.caller}"
+                head = f"## {i:02d} {a.kind} in {a.caller}" + (f" -> {a.target}" if a.target else "")
                 plans.append(f"{head}\n{a.plan}")
                 total += len(a.python)
                 python.append("\n".join([f"{head}: {len(a.python)}", *a.python]))
