@@ -156,9 +156,8 @@ def entry(spark: SparkSession) -> DataFrame:
     # missing pages exercise the retry/fail path.
     seeds = uni.filter(F.col("doc_id") < 8).select(F.col("base_url").alias("url"))
     workdir = tempfile.mkdtemp(prefix="crawlee_spark_entry_")
-    # flagship config = the scale path: merge-on-read deltas (default) with
-    # the partitioned Bloom prefilter maintained incrementally across them
-    store = FrontierStore(spark, os.path.join(workdir, "frontier"), num_partitions=8, bloom_buckets=8)
+    # flagship config = the scale path: merge-on-read deltas (default)
+    store = FrontierStore(spark, os.path.join(workdir, "frontier"), num_partitions=8)
     engine = CrawlEngine(
         spark,
         store,

@@ -11,10 +11,17 @@ sends a candidate to the exact anti-join; a "definitely new" verdict is
 always true, so no URL is ever dropped without an exact check and no
 duplicate ever sneaks in (the exact join has the final word).
 
+``FrontierStore`` does not use this operator: its seen-set is the exact
+left-anti join alone. A prefilter pays only when it spares the exact probe,
+and this one cannot — the maybe-seen branch still shuffles the whole frontier
+read (base ⋉ delta ids ∪ deltas) on ``request_id``, the same exchange the
+plain join takes, and adds a cogroup shuffle, a Python probe, a pin and the
+filter builds on top. In front of the frontier it lost every paired
+``churn`` run, at 26-27% fewer items/s (BENCH.md, "Bloom prefilter in front
+of the frontier").
+
 Layout: the seen-set is split into ``num_buckets`` partitions by
-``xxhash64(request_id) % num_buckets`` — the same key the frontier table is
-hash-distributed on, so filter maintenance is co-partitioned with snapshot
-writes. Each bucket's filter is one row ``(bucket, m_bits, k_hashes,
+``xxhash64(request_id) % num_buckets``. Each bucket's filter is one row ``(bucket, m_bits, k_hashes,
 n_keys, bits: binary)``; at 10 bits/key a 10^10-row frontier costs ~12 GB
 of filters across 4096 buckets (~3 MB each) — small enough to pin in
 executor memory, far too big for a single driver-side filter, which is why
@@ -114,56 +121,6 @@ def build_filters(
         )
 
     return hashed.groupBy("bucket").applyInPandas(build, FILTER_SCHEMA)
-
-
-def merge_filters(
-    filters: DataFrame,
-    new_ids: DataFrame,
-    *,
-    id_col: str = "request_id",
-    num_buckets: int = 64,
-    bits_per_key: int = 10,
-    k_hashes: int = 7,
-    min_bits: int = 8192,
-) -> DataFrame:
-    """Incremental maintenance: OR the new keys' bits into the per-bucket
-    filters — the Iceberg-style alternative to rebuilding from the whole
-    seen-set after every delta commit (at 10^10 rows a rebuild is a full-table
-    scan; a merge touches only the delta's ids). Existing buckets keep their
-    m/k (false-positive rate degrades gracefully as n_keys grows and resets
-    at the next compaction rebuild); buckets with no filter yet are built
-    fresh. Re-adding an id already present is a no-op bitwise, so update
-    deltas (same ids, new row versions) are harmless."""
-    hashed = new_ids.select(
-        bucket_col(id_col, num_buckets).alias("bucket"), F.xxhash64(F.col(id_col)).alias("h")
-    )
-
-    def merge(key, fil: pd.DataFrame, ids: pd.DataFrame) -> pd.DataFrame:
-        cols = ["bucket", "m_bits", "k_hashes", "n_keys", "bits"]
-        if fil.empty:
-            h = ids["h"].to_numpy().astype(np.uint64)
-            m = max(min_bits, int(len(h) * bits_per_key))
-            m = (m + 7) // 8 * 8
-            bits = np.zeros(m // 8, dtype=np.uint8)
-            _set_bits(bits, h, k_hashes, m)
-            return pd.DataFrame([(int(key[0]), m, k_hashes, len(h), bits.tobytes())], columns=cols)
-        row = fil.iloc[0]
-        if ids.empty:
-            return fil[cols]
-        bits = np.frombuffer(row["bits"], dtype=np.uint8).copy()
-        h = ids["h"].to_numpy().astype(np.uint64)
-        _set_bits(bits, h, int(row["k_hashes"]), int(row["m_bits"]))
-        return pd.DataFrame(
-            [(int(row["bucket"]), int(row["m_bits"]), int(row["k_hashes"]),
-              int(row["n_keys"]) + len(h), bits.tobytes())],
-            columns=cols,
-        )
-
-    return (
-        filters.groupBy("bucket")
-        .cogroup(hashed.groupBy("bucket"))
-        .applyInPandas(merge, FILTER_SCHEMA)
-    )
 
 
 def split_candidates(

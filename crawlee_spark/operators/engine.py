@@ -6,7 +6,7 @@ One round = the set-wise equivalent of BasicCrawler._runTaskFunction
   claim (O2-O5, C3) → lease commit (O5) → fetch = frontier ⋈ pages (S11
   replacement) + MIME/status gate (E5, E9) → extract text + links (E1-E2
   Arrow UDFs) → user hooks (C13) → round aggregate → gate links (F1-F9) +
-  dedup + enqueue (D5/D7) → side outputs: skipped, results, stats append
+  dedup + enqueue (D5) → side outputs: skipped, results, stats append
   (C10) → outcome commit: success / retry / fail (C4-C5, O8-O9, C11).
 
 ``run_round`` calls one method per phase, in that order.
@@ -516,14 +516,20 @@ class CrawlEngine:
     # -- seeding ---------------------------------------------------------------
     def add_seeds(self, seeds: DataFrame, forefront: bool = False) -> None:
         """addRequests(seeds) with the depth/robots gates of
-        basic-crawler.ts:1249-1326 applied set-wise."""
+        basic-crawler.ts:1249-1326 applied set-wise. A robots-disallowed seed
+        gets a ``robotsTxt`` skipped row, as a disallowed link does."""
         shaped = candidates_to_requests(seeds, forefront=forefront)
         if self.options.max_crawl_depth is not None:
             shaped = shaped.filter(F.col("crawl_depth") <= self.options.max_crawl_depth)
-        shaped = self._with_robots_verdict(shaped, F.col("host")).filter(F.col("_robots_ok"))
-        self.store.add_requests(
-            shaped.drop("_robots_ok"), forefront=forefront, max_new=self._remaining_budget()
-        )
+        if self.robots is not None:
+            # pinned: the skipped append and the enqueue both read the
+            # verdict, so robots_allowed_udf runs once
+            shaped = self._with_robots_verdict(shaped, F.col("host")).localCheckpoint(eager=True)
+            shaped.filter(~F.col("_robots_ok")).select(
+                "url", F.lit("robotsTxt").alias("reason"), F.lit(self.store.round).alias("round_id")
+            ).write.mode("append").parquet(self.skipped_dir)
+            shaped = shaped.filter(F.col("_robots_ok")).drop("_robots_ok")
+        self.store.add_requests(shaped, forefront=forefront, max_new=self._remaining_budget())
 
     # -- round decisions, one definition each ---------------------------------
     def _with_robots_verdict(self, df: DataFrame, host: Column) -> DataFrame:
@@ -830,9 +836,9 @@ class CrawlEngine:
     ) -> tuple[DataFrame | None, int, DataFrame | None]:
         """Enqueue phase: discovered links (extracted + handler-emitted) →
         gate → dedup. Returns the fresh frontier rows (pinned by
-        ``prepare_fresh``), how many there are, and the gate's skipped
-        ``(url, reason)`` frame — ``(None, 0, None)`` when the round found no
-        links."""
+        ``prepare_fresh``), how many there are, and the skipped ``(url,
+        reason)`` frame of the gate's rejections and the budget's cuts —
+        ``(None, 0, None)`` when the round found no links."""
         if not n_found:
             return None, 0, None
         links = self._link_candidates(classified.filter(F.col("_outcome") == "success"), n_claimed)
@@ -853,10 +859,13 @@ class CrawlEngine:
             "_arrival",
             F.shiftleft(F.col("_parent_rank").cast("long"), 32) + F.col("_pos"),
         ).drop("_parent_rank", "_pos", "_robots_ok", "origin_label")
-        budget = self._remaining_budget()
+        # the budget is the tighter of enqueueLinks' ``limit`` and the
+        # crawl's remaining maxRequestsPerCrawl; the new links it cuts are
+        # skipped under the reason of the cap that bound (F6)
+        budget, reason = self._remaining_budget(), "enqueueLimit"
         limit = self.options.enqueue.limit
-        if limit is not None:
-            budget = limit if budget is None else min(budget, limit)
+        if limit is not None and (budget is None or limit <= budget):
+            budget, reason = limit, "limit"
         carry = [
             c for c in ("label", "user_data", "method", "payload")
             if c in accepted.columns  # F3 per-pattern / base-label overrides
@@ -872,6 +881,10 @@ class CrawlEngine:
             ),
             max_new=budget,
         )
+        if self.store.over_budget is not None:
+            skipped = skipped.unionByName(
+                self.store.over_budget.withColumn("reason", F.lit(reason))
+            )
         # prepare_fresh already counted the survivors into the manifest —
         # no extra job for the metric
         return fresh_rows, self.store._manifest["total_requests"] - total_before, skipped

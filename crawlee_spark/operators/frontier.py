@@ -11,10 +11,10 @@ Reference semantics re-expressed set-wise:
 - add-dedup (``addRequest``/``batchAddRequests``,
   request-queue.ts:384-396, 449-461): "existing id ⇒ wasAlreadyPresent, row
   NOT updated" becomes an exact **left-anti join** on ``request_id`` — new
-  links minus seen set — optionally prefiltered by a Bloom filter (see
-  ``dedup_filters.py``), generalizing the reference's
-  RequestDeduplicationCache (request_dedup_cache.ts:14-51): a Bloom
-  false-positive only causes an exact re-check, never a dropped URL.
+  links minus seen set. The join is the only seen-set check: a Bloom
+  prefilter (``dedup_filters.py``) would still have to shuffle the whole
+  frontier read for its maybe-seen candidates, so it only adds work here
+  (BENCH.md, "Bloom prefilter in front of the frontier").
 - queue metadata counters (request-queue.ts:596-610) are an aggregation view,
   not stored state.
 
@@ -113,12 +113,7 @@ def with_url_keys(df: DataFrame) -> DataFrame:
     return out.withColumn(PINNED_DOMAIN_COL, registrable_domain_col(host_col("url")))
 
 
-def candidates_to_requests(
-    df: DataFrame,
-    *,
-    forefront: bool = False,
-    crawl_depth_col: str | None = None,
-) -> DataFrame:
+def candidates_to_requests(df: DataFrame, *, forefront: bool = False) -> DataFrame:
     """Project a candidate frame with a ``url`` column into frontier shape
     (without order_no — assigned at commit time by the store).
 
@@ -147,12 +142,7 @@ def candidates_to_requests(
             else registrable_domain_col(F.col("host")),
         )
         .withColumn("forefront", F.lit(forefront) if "forefront" not in cols else F.col("forefront"))
-        .withColumn(
-            "crawl_depth",
-            F.col(crawl_depth_col).cast("int")
-            if crawl_depth_col
-            else (F.col("crawl_depth").cast("int") if "crawl_depth" in cols else F.lit(0)),
-        )
+        .withColumn("crawl_depth", F.col("crawl_depth").cast("int") if "crawl_depth" in cols else F.lit(0))
         .withColumn("retry_count", F.lit(0))
         .withColumn("max_retries", F.col("max_retries").cast("int") if "max_retries" in cols else F.lit(None).cast("int"))
         .withColumn("no_retry", F.col("no_retry").cast("boolean") if "no_retry" in cols else F.lit(False))
@@ -186,8 +176,8 @@ class FrontierStore:
     O(claimed+fresh)) and reads resolve last-writer-wins; every
     ``compact_every`` deltas the full-snapshot ``commit`` rewrites the base.
     At the design point (10^10-row frontier) a full rewrite per round is
-    ~2 TB of writes for a few hundred MB of change. MOR reads and the Bloom
-    probe anti-join against the outstanding delta ids, broadcast when
+    ~2 TB of writes for a few hundred MB of change. MOR reads anti-join the
+    base against the outstanding delta ids, broadcast when
     ``sizing.fits_broadcast`` admits the manifest's delta row and id-byte
     counts.
 
@@ -199,9 +189,10 @@ class FrontierStore:
     spark: SparkSession
     root: str
     num_partitions: int = 32
-    bloom_buckets: int | None = None  # enable D7 prefilter with this many buckets
     compact_every: int = 8  # deltas per base rewrite
     _manifest: dict = field(default_factory=dict, repr=False)
+    # the new rows the last ``prepare_fresh`` budget cut, as ``url`` rows
+    over_budget: DataFrame | None = field(default=None, init=False, repr=False)
 
     MANIFEST = "manifest.json"
 
@@ -343,135 +334,6 @@ class FrontierStore:
             ids = F.broadcast(ids)
         return base.join(ids, "request_id", "left_anti").unionByName(merged)
 
-    def filters(self) -> DataFrame:
-        """Per-bucket Bloom filters covering the CURRENT frontier
-        (snapshot + outstanding deltas), maintained incrementally.
-
-        A delta commit never triggers a rebuild: the missing deltas' ids are
-        OR-merged into the previous filter version (O(delta), the Iceberg
-        discipline) and written as a new immutable version. Compaction does
-        not rebuild either — ids are never deleted, so ``commit_delta``
-        re-points the carried version at the new snapshot; only bootstrap
-        (or an out-of-band ``commit``, e.g. ``add_requests``) rebuilds from
-        the full seen-set.
-        The version pointer lives in the manifest (``filters_state``) and is
-        advanced only after the files exist, so a crash mid-maintenance just
-        redoes the idempotent merge."""
-        from crawlee_spark.operators.dedup_filters import build_filters, merge_filters
-
-        nb = self.bloom_buckets or 64
-        snap = self._manifest["snapshot"]
-        deltas = list(self._manifest.get("deltas", []))
-        state = self._manifest.get("filters_state")
-
-        def fdir(v: int) -> str:
-            return os.path.join(self.root, "filters", f"f{v:06d}")
-
-        if state is not None and os.path.exists(fdir(state["version"])):
-            if state["snapshot"] == snap and state["deltas"] == deltas:
-                return self.spark.read.parquet(fdir(state["version"]))
-            if state["snapshot"] == snap and state["deltas"] == deltas[: len(state["deltas"])]:
-                missing = deltas[len(state["deltas"]):]
-                ids = None
-                for seq in missing:
-                    part = self.spark.read.parquet(self._delta_dir(seq)).select("request_id")
-                    ids = part if ids is None else ids.unionByName(part)
-                merged = merge_filters(
-                    self.spark.read.parquet(fdir(state["version"])), ids, num_buckets=nb
-                )
-                v = state["version"] + 1
-                merged.write.mode("overwrite").parquet(fdir(v))
-                self._manifest["filters_state"] = {
-                    "snapshot": snap, "deltas": deltas, "version": v,
-                }
-                self._write_manifest()
-                old = fdir(v - 2)
-                if v >= 2 and os.path.exists(old):
-                    shutil.rmtree(old, ignore_errors=True)
-                return self.spark.read.parquet(fdir(v))
-        # snapshot changed (or bootstrap): full rebuild from the seen-set
-        v = (state["version"] + 1) if state is not None else 0
-        build_filters(self.read().select("request_id"), num_buckets=nb).write.mode(
-            "overwrite"
-        ).parquet(fdir(v))
-        self._manifest["filters_state"] = {"snapshot": snap, "deltas": deltas, "version": v}
-        self._write_manifest()
-        return self.spark.read.parquet(fdir(v))
-
-    def _delta_ids(self) -> DataFrame | None:
-        """request_ids touched by the outstanding deltas (O(claimed+fresh)
-        rows; may repeat across deltas — harmless for anti-joins)."""
-        deltas = self._manifest.get("deltas", [])
-        ids = None
-        for seq in deltas:
-            p = (
-                self.spark.read.schema(FRONTIER_SCHEMA)
-                .parquet(self._delta_dir(seq))
-                .select("request_id")
-            )
-            ids = p if ids is None else ids.unionByName(p)
-        return ids
-
-    def filters_base(self) -> DataFrame:
-        """Per-bucket Bloom filters covering AT LEAST the base snapshot.
-
-        The current filter version qualifies whenever it was built/carried
-        for this snapshot (covering extra delta ids is harmless — the filter
-        direction only forbids a false "definitely new" for a covered id).
-        Out-of-band snapshot change (``add_requests``' full commit) or
-        bootstrap rebuilds from the base."""
-        from crawlee_spark.operators.dedup_filters import build_filters
-
-        nb = self.bloom_buckets or 64
-        snap = self._manifest["snapshot"]
-        state = self._manifest.get("filters_state")
-
-        def fdir(v: int) -> str:
-            return os.path.join(self.root, "filters", f"f{v:06d}")
-
-        if (
-            state is not None
-            and state["snapshot"] == snap
-            and os.path.exists(fdir(state["version"]))
-        ):
-            return self.spark.read.parquet(fdir(state["version"]))
-        base = (
-            self.spark.read.schema(FRONTIER_SCHEMA)
-            .parquet(self._snapshot_dir(snap))
-            .select("request_id")
-        )
-        v = (state["version"] + 1) if state is not None else 0
-        build_filters(base, num_buckets=nb).write.mode("overwrite").parquet(fdir(v))
-        self._manifest["filters_state"] = {"snapshot": snap, "deltas": [], "version": v}
-        self._write_manifest()
-        return self.spark.read.parquet(fdir(v))
-
-    def _bloom_fresh(self, deduped: DataFrame, frontier: DataFrame) -> DataFrame:
-        """D5+D7 dedup with base-covering filters — NO filter write in the
-        enqueue hot path.
-
-        The filters cover the base snapshot only (maintained once per
-        compaction by the carry in ``commit_delta``). Ids are never deleted,
-        so the frontier's ids are the base ids plus the outstanding delta ids:
-        the candidates are first anti-joined against the delta ids
-        (O(claimed+fresh), broadcast when they fit), then ``bloom_anti_join``
-        checks the rest against the base filters, so the result is exactly
-        ``candidates − frontier``. The previous shape OR-merged every
-        delta's ids into a NEW filter version per round — correct, but it
-        rewrote every bucket's bits each round (~12 GB of filter files per
-        round at the 10^10-row design point). Now the hot path pays one
-        small anti-join and filter writes amortize to 1/compact_every."""
-        from crawlee_spark.operators.dedup_filters import bloom_anti_join
-
-        delta_ids = self._delta_ids()
-        if delta_ids is not None:
-            if self._deltas_broadcastable():
-                delta_ids = F.broadcast(delta_ids)
-            deduped = deduped.join(delta_ids, "request_id", "left_anti")
-        return bloom_anti_join(
-            deduped, frontier, self.filters_base(), num_buckets=self.bloom_buckets
-        )
-
     def commit(self, df: DataFrame, *, round_increment: bool = False, extra: dict | None = None) -> int:
         """Write a new snapshot and atomically advance the manifest.
 
@@ -575,24 +437,8 @@ class FrontierStore:
             }
         )
         if len(deltas) >= self.compact_every:
-            # compaction: one full rewrite absorbs the deltas (commit clears
-            # them). Bloom filters survive compaction unchanged — request_ids
-            # are never deleted, so the incrementally OR-merged filter version
-            # still covers exactly the compacted table: bring it current over
-            # any missing deltas (O(delta) merge), remember it, and re-point
-            # it at the new snapshot instead of triggering a full-table
-            # rebuild on the next filters() call.
-            carried = None
-            if self.bloom_buckets:
-                self.filters()  # O(missing-deltas) incremental merge
-                carried = self._manifest["filters_state"]["version"]
-            snap = self.commit(self.read())
-            if carried is not None:
-                self._manifest["filters_state"] = {
-                    "snapshot": snap, "deltas": [], "version": carried,
-                }
-                self._write_manifest()
-            return snap
+            # compaction: one full rewrite absorbs the deltas (commit clears them)
+            return self.commit(self.read())
         self._write_manifest()
         return self._manifest["snapshot"]
 
@@ -603,7 +449,6 @@ class FrontierStore:
         *,
         forefront: bool = False,
         max_new: int | None = None,
-        against: DataFrame | None = None,
     ) -> DataFrame:
         """Dedup + order candidate requests; returns ONLY the fresh rows
         (pinned via localCheckpoint), advancing the order sequence. The caller
@@ -620,12 +465,13 @@ class FrontierStore:
            (``wasAlreadyPresent`` rows vanish — they are *not* updated);
         3. budget (``maxNewRequests``, F6): only NEW rows consume budget
            (basic_crawler.test.ts:2035-2130), applied as a limit on the
-           deduped set in arrival order;
+           deduped set in arrival order; the new rows past it, as ``url``
+           rows, become ``over_budget`` (None without a budget);
         4. order assignment (O1): ``order_no = ±(order_seq + rank)`` —
            deterministic sequence, forefront negative ⇒ ascending sort gives
            forefront-LIFO-then-FIFO (request-queue.ts:661-667, 224).
         """
-        frontier = against if against is not None else self.read()
+        frontier = self.read()
 
         # key the candidates (UDF normalize + sha-256 id) but DON'T derive the
         # full frontier row yet: the dedup shuffle should carry only the
@@ -656,23 +502,29 @@ class FrontierStore:
             .agg(F.min_by(F.struct(*payload), F.col("_arrival")).alias("_row"))
             .select("request_id", "_row.*")
         )
-        # (2) seen-set dedup: exact left-anti join, fronted by the
-        # partitioned Bloom prefilter when enabled (D7) — definitely-new
-        # candidates skip the frontier join shuffle entirely; maybe-seen ones
-        # get the exact check, so the result is identical either way. The
-        # filters cover the BASE snapshot; outstanding MOR delta ids are
-        # anti-joined exactly (never a stale "definitely new" for a
-        # delta-added id — the one direction the guarantee forbids) — see
-        # ``_bloom_fresh``. A young store with no base yet has no filters:
-        # its frontier IS the deltas, so the exact anti-join is delta-sized.
-        if self.bloom_buckets and against is None and self._manifest["snapshot"] >= 0:
-            fresh = self._bloom_fresh(deduped, frontier)
-        else:
-            fresh = deduped.join(frontier.select("request_id"), "request_id", "left_anti")
+        # (2) seen-set dedup: exact left-anti join against the frontier (the
+        # base ⋉ delta ids ∪ deltas read, shuffled on request_id)
+        fresh = deduped.join(frontier.select("request_id"), "request_id", "left_anti")
+        # pin the narrow new rows ONCE (monotonically_increasing_id is
+        # partition-dependent, so the stats pass, the budget cut and the
+        # returned frame must see identical values); the wide frontier row is
+        # derived lazily on top — a deterministic map-only projection that
+        # downstream actions (union → snapshot write) evaluate exactly once more
+        fresh = fresh.localCheckpoint(eager=True)
         # (3) budget on NEW rows only, in arrival order — TakeOrdered (top-k
-        # per partition then merge on the driver), no global window
+        # per partition then merge on the driver), no global window. Arrival
+        # keys are unique, so the kept rows are exactly those up to the
+        # kept ``hi``: the cut is a filter over the pin, not a second join
+        kept = fresh if max_new is None else fresh.orderBy("_arrival").limit(max_new)
+        stats = kept.agg(
+            F.count("*").alias("n"), F.min("_arrival").alias("lo"), F.max("_arrival").alias("hi")
+        ).collect()[0]
+        added = int(stats["n"] or 0)
+        self.over_budget = None
         if max_new is not None:
-            fresh = fresh.orderBy("_arrival").limit(max_new)
+            past = F.col("_arrival") > F.lit(stats["hi"]) if added else F.lit(True)
+            self.over_budget = fresh.filter(past).select("url")
+            fresh = fresh.filter(~past)
         # (4) deterministic order_no: SPARSE sequence ``base + (_arrival -
         # min_arrival) + 1``. Arrival keys are unique, so order_no is unique
         # and ascending-in-arrival — the FIFO/forefront contract only needs a
@@ -681,16 +533,6 @@ class FrontierStore:
         # row_number (the difference between O(batch) on one core and a
         # map-only pass at a 10^10-row frontier).
         base_seq = self.order_seq
-        # pin the narrow survivor rows ONCE (monotonically_increasing_id is
-        # partition-dependent, so the stats pass and the returned frame must
-        # see identical values); the wide frontier row is derived lazily on
-        # top — a deterministic map-only projection that downstream actions
-        # (union → snapshot write) evaluate exactly once more
-        fresh = fresh.localCheckpoint(eager=True)
-        stats = fresh.agg(
-            F.count("*").alias("n"), F.min("_arrival").alias("lo"), F.max("_arrival").alias("hi")
-        ).collect()[0]
-        added = int(stats["n"] or 0)
         lo = int(stats["lo"]) if stats["lo"] is not None else 0
         span = (int(stats["hi"]) - lo + 1) if added else 0
 

@@ -505,7 +505,7 @@ def test_kitchen_sink_integration(spark, tmp_store_dir):
     robots = spark.createDataFrame(
         [("a.com", "User-agent: *\nDisallow: /private\n")], "host string, robots_txt string"
     )
-    store = FrontierStore(spark, tmp_store_dir, num_partitions=4, bloom_buckets=4)
+    store = FrontierStore(spark, tmp_store_dir, num_partitions=4)
     engine = CrawlEngine(
         spark, store, pages, robots=robots,
         policy=PolitenessPolicy(max_concurrency=10, per_host_cap=10, salt_buckets=4),
@@ -579,6 +579,60 @@ def test_link_gate_robots_keys_on_normalized_host(spark, tmp_store_dir):
         (blocked, "robotsTxt")
     ]
     assert [r["url"] for r in engine.store.read().collect()] == ["https://www.example.com/a"]
+
+
+def test_robots_disallowed_seed_is_skipped(spark, tmp_store_dir):
+    """The seed gate reports a robots-disallowed seed as a 'robotsTxt'
+    skipped row, as the link gate and the fetch re-check do, and keeps it
+    out of the frontier."""
+    pages = spark.createDataFrame(
+        [("https://x.com/a", b"<p>a</p>", 200, "text/html")],
+        "url string, html binary, status_code int, content_type string",
+    )
+    robots = spark.createDataFrame(
+        [("x.com", "User-agent: *\nDisallow: /private\n")], "host string, robots_txt string"
+    )
+    engine = build_engine(spark, tmp_store_dir, pages, robots=robots)
+    engine.add_seeds(
+        spark.createDataFrame([("https://x.com/a",), ("https://x.com/private/s",)], "url string")
+    )
+    assert [(s["url"], s["reason"], s["round_id"]) for s in engine.skipped().collect()] == [
+        ("https://x.com/private/s", "robotsTxt", 0)
+    ]
+    assert [r["url"] for r in engine.store.read().collect()] == ["https://x.com/a"]
+
+
+@pytest.mark.parametrize(
+    "options, reason",
+    [
+        (dict(enqueue=EnqueueOptions(strategy="all", limit=2)), "limit"),
+        (
+            dict(max_requests_per_crawl=3, enqueue=EnqueueOptions(strategy="all", limit=4)),
+            "enqueueLimit",
+        ),
+    ],
+    ids=["enqueue-limit", "request-budget"],
+)
+def test_budget_cut_links_are_skipped(spark, tmp_store_dir, options, reason):
+    """The enqueue budget keeps the first new links in page order; each new
+    link it cuts is a skipped row of the round, under 'limit' when
+    enqueueLinks' ``limit`` binds and 'enqueueLimit' when
+    maxRequestsPerCrawl does."""
+    links = "".join(f'<a href="https://x.com/p{i}">{i}</a>' for i in range(5))
+    pages = spark.createDataFrame(
+        [("https://x.com/", links.encode(), 200, "text/html")],
+        "url string, html binary, status_code int, content_type string",
+    )
+    engine = build_engine(spark, tmp_store_dir, pages, options=CrawlOptions(**options))
+    engine.add_seeds(spark.createDataFrame([("https://x.com/",)], "url string"))
+    metrics = engine.run_round()
+    assert metrics["links_found"] == 5 and metrics["enqueued"] == 2
+    assert sorted((s["url"], s["reason"], s["round_id"]) for s in engine.skipped().collect()) == [
+        (f"https://x.com/p{i}", reason, 1) for i in (2, 3, 4)
+    ]
+    assert sorted(r["url"] for r in engine.store.read().collect()) == [
+        "https://x.com/", "https://x.com/p0", "https://x.com/p1"
+    ]
 
 
 def test_fetch_time_robots_skip_is_skipped_not_failed(spark, tmp_store_dir):

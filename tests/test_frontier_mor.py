@@ -69,6 +69,32 @@ def test_mor_compaction(spark, tmp_store_dir):
     assert after == before  # same key set survives compaction
 
 
+def test_dedup_exact_across_base_and_deltas(spark, tmp_store_dir):
+    """One candidate batch holding base-only ids, delta-only ids and new
+    ids: the seen-set anti-join against the merge-on-read frontier returns
+    only the new ids."""
+    store = FrontierStore(spark, tmp_store_dir, num_partitions=4, compact_every=100)
+    store.add_requests(
+        spark.createDataFrame([(f"http://a.com/{i}",) for i in range(40)], "url string")
+    )
+    store.commit_delta(
+        store.prepare_fresh(
+            spark.createDataFrame([(f"http://a.com/{i}",) for i in range(40, 50)], "url string")
+        )
+    )
+    assert store._manifest["deltas"] and store._manifest["snapshot"] >= 0
+    # 30-39 are in the base only, 40-49 in the delta only, 50-59 are new
+    fresh = store.prepare_fresh(
+        spark.createDataFrame([(f"http://a.com/{i}",) for i in range(30, 60)], "url string")
+    )
+    assert sorted(r["url"] for r in fresh.collect()) == sorted(
+        f"http://a.com/{i}" for i in range(50, 60)
+    )
+    store.commit_delta(fresh)
+    assert store.read().count() == 60
+    assert store.read().select("request_id").distinct().count() == 60
+
+
 def test_lease_delta_committed_mid_round(spark, tmp_store_dir):
     """O5: the claimed set is committed as a mid-round delta with
     lease_until = round and state BEFORE_NAV, before any outcome exists —
