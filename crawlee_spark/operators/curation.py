@@ -19,7 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from crawlee_spark.operators.scheduler import global_running_total
 
 
 def _bucket_col(id_col: Column | str, *, salt: str = "", modulus: int = 1) -> Column:
@@ -79,40 +80,18 @@ def global_prefix_sum(
     partitions: int = 32,
 ) -> DataFrame:
     """EXCLUSIVE prefix sum of ``value_col`` in ``order_col`` order (values
-    before this row), without a single-task global window — the
-    ``global_row_number`` shape (scheduler.py) with a running sum instead of
-    a rank: range-partition on the order column, sum within each partition
-    under a PARTITIONED window, add per-partition offsets (one
-    sum-per-partition job, ≤ ``partitions`` rows collected).
+    before this row), without a single-task global window: the two-phase
+    ``scheduler.global_running_total`` of the sum, minus the row's own value.
 
     ``order_col`` must be unique (the repo's ranking discipline): with ties
     the within-partition ordering — and therefore the prefix — would depend
     on where range boundaries land. Values must be non-negative longs small
     enough that the corpus total fits BIGINT."""
-    parted = (
-        df.repartitionByRange(partitions, F.col(order_col))
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin: offsets must match this layout
+    v = F.col(value_col).cast("long")
+    running = global_running_total(
+        df, order_col, F.sum(v), col_name=col_name, partitions=partitions
     )
-    partials = {
-        int(r["_pid"]): int(r["s"])
-        for r in parted.groupBy("_pid")
-        .agg(F.sum(F.col(value_col).cast("long")).alias("s"))
-        .collect()
-    }
-    if not partials:
-        return parted.drop("_pid").withColumn(col_name, F.lit(None).cast("long"))
-    offsets, acc = {}, 0
-    for pid in sorted(partials):
-        offsets[pid] = acc
-        acc += partials[pid]
-    off = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-    w = Window.partitionBy("_pid").orderBy(order_col)
-    inclusive = F.sum(F.col(value_col).cast("long")).over(w)
-    return parted.withColumn(
-        col_name,
-        (inclusive - F.col(value_col).cast("long") + off[F.col("_pid")]).cast("long"),
-    ).drop("_pid")
+    return running.withColumn(col_name, F.col(col_name) - v)
 
 
 def pack_sequences(

@@ -6,10 +6,17 @@ One round = the set-wise equivalent of BasicCrawler._runTaskFunction
   claim (O2-O5, C3) → lease commit (O5) → fetch = frontier ⋈ pages (S11
   replacement) + MIME/status gate (E5, E9) → extract text + links (E1-E2
   Arrow UDFs) → user hooks (C13) → round aggregate → gate links (F1-F9) +
-  dedup + enqueue (D5) → side outputs: skipped, results, stats append
-  (C10) → outcome commit: success / retry / fail (C4-C5, O8-O9, C11).
+  dedup + enqueue (D5) → side outputs: skipped, results, outcome log (C10),
+  session and proxy state, staged → outcome commit: success / retry / fail
+  (C4-C5, O8-O9, C11), which also publishes the staged side outputs.
 
 ``run_round`` calls one method per phase, in that order.
+
+The engine writes no file itself: every side table is a
+``FrontierStore.stage`` of a new version, and nothing is staged before the
+lease commit, so the outcome commit's manifest swap publishes the whole
+round at once. A crash anywhere in a round leaves every reader on the last
+committed round.
 
 Retry policy (basic-crawler.ts:1881-1941):
 - blocked statuses {401,403,429} (session_pool/consts.ts:1) ⇒ session
@@ -69,7 +76,7 @@ from crawlee_spark.operators.handlers import (
 )
 from crawlee_spark.operators.kvstore import KeyValueStore
 from crawlee_spark.operators.proxies import (
-    empty_tracker_state, predict_proxy_tiers, rotate_proxies, split_assignments,
+    TRACKER_STATE_SCHEMA, predict_proxy_tiers, rotate_proxies, split_assignments,
 )
 from crawlee_spark.operators.scheduler import (
     PolitenessPolicy,
@@ -81,7 +88,7 @@ from crawlee_spark.operators.sessions import (
 )
 from crawlee_spark.operators.sizing import fits_broadcast, maybe_broadcast
 from crawlee_spark.operators.stats import (
-    OUTCOME_SCHEMA, error_summary, final_statistics, persist_run_statistics,
+    OUTCOME_SCHEMA, final_statistics, persist_run_statistics,
 )
 from crawlee_spark.sources.urls import parse_content_type_cols
 
@@ -102,6 +109,7 @@ PAGES_PRUNE_MIN_BYTES = 1 << 30
 # first), so the driver-side write loop stays bounded by error-template
 # cardinality
 MAX_ERROR_SNAPSHOTS_PER_ROUND = 100
+PROXY_LAST_SCHEMA = "request_id string, last_proxy_tier int"
 
 
 def _skip_nav() -> Column:
@@ -220,7 +228,8 @@ class CrawlOptions:
     # failedRequestHandler (basic-crawler.ts:1953-1965): set-wise hook over
     # the round's finalized failures, seeing error_messages WITH the final
     # error already pushed. fn(pdf) -> pd.DataFrame | None; returned rows
-    # (schema: failed_handler_schema) append to <root>/failed_handled.
+    # (schema: failed_handler_schema, plus round_id) append to the
+    # ``failed_handled()`` table.
     failed_request_handler: "Callable[[pd.DataFrame], pd.DataFrame] | None" = None
     failed_handler_schema: "T.StructType | None" = None
 
@@ -255,12 +264,6 @@ class CrawlEngine:
                 "failed_request_handler requires failed_handler_schema "
                 "(the columns of the frame it returns)"
             )
-        self.results_dir = os.path.join(self.store.root, "results")
-        self.outcomes_dir = os.path.join(self.store.root, "outcomes")
-        self.proxy_state_dir = os.path.join(self.store.root, "proxy_state")
-        self.proxy_last_dir = os.path.join(self.store.root, "proxy_last")
-        self.skipped_dir = os.path.join(self.store.root, "skipped")
-        self.sessions_dir = os.path.join(self.store.root, "sessions")
         # size the robots dim ONCE: broadcast only when provably small
         self._robots = maybe_broadcast(self.robots) if self.robots is not None else None
         cols = self.pages.columns
@@ -291,63 +294,50 @@ class CrawlEngine:
             total = 0
         self._prune_fetch = total >= PAGES_PRUNE_MIN_BYTES
 
-    # -- derived frames -------------------------------------------------------
+    # -- committed side tables -------------------------------------------------
     def results(self) -> DataFrame:
-        if not os.path.exists(self.results_dir):
-            return self.spark.createDataFrame(
-                [], "request_id string, url string, loaded_url string, text string, "
-                "crawl_depth int, label string, round_id int"
-            )
-        return self.spark.read.parquet(self.results_dir)
+        return self.store.table(
+            "results",
+            "request_id string, url string, loaded_url string, text string, "
+            "crawl_depth int, label string, round_id int",
+        )
 
     def outcomes(self) -> DataFrame:
-        if not os.path.exists(self.outcomes_dir):
-            return self.spark.createDataFrame([], OUTCOME_SCHEMA)
-        return self.spark.read.schema(OUTCOME_SCHEMA).parquet(self.outcomes_dir)
+        return self.store.table("outcomes", OUTCOME_SCHEMA)
 
     def skipped(self) -> DataFrame:
-        if not os.path.exists(self.skipped_dir):
-            return self.spark.createDataFrame([], "url string, reason string, round_id int")
-        return self.spark.read.parquet(self.skipped_dir)
+        return self.store.table("skipped", "url string, reason string, round_id int")
+
+    def failed_handled(self) -> DataFrame:
+        """The rows ``failed_request_handler`` returned, with their round."""
+        fields = (self.options.failed_handler_schema or T.StructType()).fields
+        return self.store.table(
+            "failed_handled", T.StructType([*fields, T.StructField("round_id", T.IntegerType())])
+        )
 
     def final_statistics(self) -> dict:
         return final_statistics(self.outcomes())
 
-    def error_summary(self) -> DataFrame:
-        """Grouped error report (ErrorTracker analog) over the outcome log."""
-        return error_summary(self.outcomes())
-
     # -- session pool (C6) ------------------------------------------------------
     def session_pool(self) -> DataFrame | None:
+        """The committed pool; before the first round, a fresh one."""
         if self.session_policy is None:
             return None
-        if not os.path.exists(self.sessions_dir):
-            make_pool(self.spark, self.session_policy.max_pool_size, 0).write.parquet(
-                self.sessions_dir
-            )
-        return self.spark.read.parquet(self.sessions_dir)
-
-    def _update_sessions(
-        self, outcomes_with_sessions: DataFrame, round_id: int, **update_kwargs
-    ) -> None:
-        pool = self.session_pool()
-        updated = update_pool(
-            pool, outcomes_with_sessions, self.session_policy, **update_kwargs
+        return self.store.table(
+            "sessions", make_pool(self.spark, self.session_policy.max_pool_size, 0)
         )
-        updated = replenish_pool(self.spark, updated, round_id, self.session_policy)
-        updated = updated.localCheckpoint(eager=True)  # pin before overwrite
-        updated.write.mode("overwrite").parquet(self.sessions_dir)
 
     # -- proxy rotation policy (proxy_configuration.ts) -----------------------
-    def _assign_proxies(self, claimed: DataFrame) -> DataFrame:
+    def _assign_proxies(self, claimed: DataFrame) -> tuple[DataFrame, DataFrame]:
         """Stamp proxy_tier/proxy_url onto the claim set (the newProxyInfo
-        call the reference makes per request before navigation)."""
+        call the reference makes per request before navigation); also
+        returns the new rotation state, which the side outputs stage."""
         cfg = self.options.proxy_config
         if getattr(cfg, "proxy_urls", ()):
             return self._assign_plain_proxies(claimed, cfg)
         return self._assign_tiered_proxies(claimed, cfg)
 
-    def _assign_plain_proxies(self, claimed: DataFrame, cfg) -> DataFrame:
+    def _assign_plain_proxies(self, claimed: DataFrame, cfg) -> tuple[DataFrame, DataFrame]:
         """Sticky rotation (proxy_configuration.ts:400-415): a SESSION keeps
         the url it first drew; first-appearance ranks continue across rounds
         via the persisted session->url map (usedProxyUrls, bounded by the
@@ -357,25 +347,24 @@ class CrawlEngine:
         persisted scalar offset (nextCustomUrlIndex), so nothing
         per-request is ever written."""
         with_sessions = self.session_policy is not None
-        existing = None
-        n_existing = 0
-        if os.path.exists(self.proxy_state_dir):
-            existing = self.spark.read.parquet(self.proxy_state_dir)
-            if with_sessions:
-                n_existing = existing.count()
-            else:  # scalar offset table: one row, one long
-                n_existing = existing.collect()[0]["draws"]
-        key = F.col("session_id") if with_sessions else F.col("request_id")
-        keyed = claimed.withColumn("_pkey", key)
-        if with_sessions and existing is not None:
+        keyed = claimed.withColumn(
+            "_pkey", F.col("session_id") if with_sessions else F.col("request_id")
+        )
+        if with_sessions:
+            existing = self.store.table("proxy_state", "session_key string, proxy_url string")
+            n_existing = existing.count()
             fresh = keyed.join(
                 existing.withColumnRenamed("session_key", "_pkey"), "_pkey", "left_anti"
             )
-        else:
+        else:  # scalar offset table: one row, one long
+            draws = self.spark.createDataFrame([(0,)], "draws long")
+            n_existing = self.store.table("proxy_state", draws).collect()[0]["draws"]
             fresh = keyed
         # claim order = ascending signed order_no (forefront first) — and it
         # is UNIQUE, which the two-phase rank requires; abs() would both
-        # reorder and create cross-sign ties
+        # reorder and create cross-sign ties. Pinned: the side outputs stage
+        # it after the lease commit, whose compaction may delete the deltas
+        # the claim read
         new_map = rotate_proxies(
             fresh.select("_pkey", F.col("order_no").alias("_ord")),
             cfg.proxy_urls,
@@ -383,47 +372,32 @@ class CrawlEngine:
             order_col="_ord",
             num_partitions=self.store.num_partitions,
             rank_offset=n_existing,
-        ).withColumnRenamed("_pkey", "session_key")
+        ).withColumnRenamed("_pkey", "session_key").localCheckpoint(eager=True)
         if with_sessions:
-            new_map.write.mode("append").parquet(self.proxy_state_dir)
-            state = self.spark.read.parquet(self.proxy_state_dir)
+            state = new_state = existing.unionByName(new_map)
         else:
-            state = new_map.localCheckpoint(eager=True)  # pin before counting
-            self.spark.createDataFrame(
-                [(n_existing + state.count(),)], "draws long"
-            ).write.mode("overwrite").parquet(self.proxy_state_dir)
-        return (
-            keyed.join(
-                state.withColumnRenamed("session_key", "_pkey"), "_pkey", "left"
-            )
+            state = new_map
+            new_state = self.spark.createDataFrame([(n_existing + new_map.count(),)], "draws long")
+        assigned = (
+            keyed.join(state.withColumnRenamed("session_key", "_pkey"), "_pkey", "left")
             .drop("_pkey")
             .withColumn("proxy_tier", F.lit(None).cast("int"))
         )
+        return assigned, new_state
 
-    def _assign_tiered_proxies(self, claimed: DataFrame, cfg) -> DataFrame:
+    def _assign_tiered_proxies(self, claimed: DataFrame, cfg) -> tuple[DataFrame, DataFrame]:
         """Per-domain tier escalation (proxy_configuration.ts:337-368): the
         ordered claim replay charges each RETRY's previous tier (+10),
         predicts with decay, and the tracker state — histogram, current
         tier, rotation index — persists round-to-round per domain.
         Untouched domains carry their state forward."""
-        state = (
-            self.spark.read.parquet(self.proxy_state_dir)
-            if os.path.exists(self.proxy_state_dir)
-            else empty_tracker_state(self.spark)
-        )
-        last = (
-            self.spark.read.parquet(self.proxy_last_dir)
-            if os.path.exists(self.proxy_last_dir)
-            else None
-        )
+        state = self.store.table("proxy_state", TRACKER_STATE_SCHEMA)
         att = claimed.select(
             "request_id",
             host_col("url").alias("domain"),
             # replay in claim order: ascending signed order_no (unique)
             F.col("order_no").alias("_ord"),
-        )
-        if last is not None:
-            att = att.join(last, "request_id", "left")
+        ).join(self.store.table("proxy_last", PROXY_LAST_SCHEMA), "request_id", "left")
         out = predict_proxy_tiers(
             att,
             cfg.tiered_proxy_urls,
@@ -431,33 +405,29 @@ class CrawlEngine:
             domain_col="domain",
             order_col="_ord",
             request_col="request_id",
-            last_tier_col="last_proxy_tier" if last is not None else None,
+            last_tier_col="last_proxy_tier",
         ).localCheckpoint(eager=True)  # one replay pinned for both outputs
         assignments, new_state = split_assignments(out)
         carried = state.join(new_state.select("domain"), "domain", "left_anti")
-        full_state = new_state.unionByName(carried).localCheckpoint(eager=True)
-        full_state.write.mode("overwrite").parquet(self.proxy_state_dir)
-        return claimed.join(
+        assigned = claimed.join(
             assignments.select("request_id", "proxy_tier", "proxy_url"),
             "request_id",
             "left",
         )
+        return assigned, new_state.unionByName(carried)
 
-    def _update_proxy_last(self, classified: DataFrame) -> None:
-        """Persist the tier each WOULD-RETRY request just used (the
+    def _proxy_last(self, classified: DataFrame) -> DataFrame:
+        """The tier each WOULD-RETRY request just used (the
         userData.__crawlee.lastProxyTier analog, proxy_configuration.ts:
         349-364): next round's claim replay charges it. Finalized requests
         drop out; the table is bounded by outstanding retries."""
         retries = classified.filter(
             F.col("_outcome").isin("retry", "session_retry")
         ).select("request_id", F.col("proxy_tier").alias("last_proxy_tier"))
-        if os.path.exists(self.proxy_last_dir):
-            old = self.spark.read.parquet(self.proxy_last_dir)
-            kept = old.join(classified.select("request_id"), "request_id", "left_anti")
-            retries = kept.unionByName(retries)
-        retries.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            self.proxy_last_dir
+        kept = self.store.table("proxy_last", PROXY_LAST_SCHEMA).join(
+            classified.select("request_id"), "request_id", "left_anti"
         )
+        return kept.unionByName(retries)
 
     def _save_error_snapshots(self, wide: DataFrame) -> None:
         """ErrorSnapshotter.captureSnapshot as a set operation
@@ -522,12 +492,16 @@ class CrawlEngine:
         if self.options.max_crawl_depth is not None:
             shaped = shaped.filter(F.col("crawl_depth") <= self.options.max_crawl_depth)
         if self.robots is not None:
-            # pinned: the skipped append and the enqueue both read the
-            # verdict, so robots_allowed_udf runs once
+            # pinned: the skipped rows and the enqueue both read the
+            # verdict, so robots_allowed_udf runs once; the seed commit
+            # publishes the skipped rows
             shaped = self._with_robots_verdict(shaped, F.col("host")).localCheckpoint(eager=True)
-            shaped.filter(~F.col("_robots_ok")).select(
-                "url", F.lit("robotsTxt").alias("reason"), F.lit(self.store.round).alias("round_id")
-            ).write.mode("append").parquet(self.skipped_dir)
+            self.store.stage(
+                "skipped",
+                shaped.filter(~F.col("_robots_ok")).select(
+                    "url", F.lit("robotsTxt").alias("reason"), F.lit(self.store.round).alias("round_id")
+                ),
+            )
             shaped = shaped.filter(F.col("_robots_ok")).drop("_robots_ok")
         self.store.add_requests(shaped, forefront=forefront, max_new=self._remaining_budget())
 
@@ -578,7 +552,7 @@ class CrawlEngine:
         (see the module docstring) takes its inputs as arguments and returns
         its outputs."""
         round_id = self.store.round + 1
-        claimed, n_claimed, claim_url_bytes = self._claim(round_id)
+        claimed, n_claimed, claim_url_bytes, proxy_state = self._claim(round_id)
         if n_claimed == 0:
             return {"round": round_id, "claimed": 0, "done": True}
         self._commit_lease(claimed, round_id)
@@ -589,7 +563,7 @@ class CrawlEngine:
         fresh_rows, n_enqueued, gate_skipped = self._enqueue(
             classified, n_links + n_emitted, n_claimed
         )
-        self._write_side_outputs(classified, gate_skipped, round_id)
+        self._write_side_outputs(classified, gate_skipped, proxy_state, round_id)
         self._commit_outcomes(classified, fresh_rows, cnts, r_lo, r_span, round_id)
         return {
             "round": round_id,
@@ -600,9 +574,10 @@ class CrawlEngine:
             "done": False,
         }
 
-    def _claim(self, round_id: int) -> tuple[DataFrame, int, int]:
+    def _claim(self, round_id: int) -> tuple[DataFrame, int, int, DataFrame | None]:
         """Claim phase: the round's claim set with its session and proxy
-        assignments, pinned, plus its row count and url byte mass."""
+        assignments, pinned, plus its row count, its url byte mass and the
+        new proxy rotation state (None without a proxy policy)."""
         claimed = claim_round(self.store.read(), round_id, self.policy)
         if self.options.max_requests_per_crawl is not None:
             # O(1) manifest counter — not a frontier aggregate per round
@@ -615,8 +590,9 @@ class CrawlEngine:
             claimed = assign_sessions(claimed, self.session_pool(), round_id, self.session_policy)
         else:
             claimed = claimed.withColumn("session_id", F.lit(None).cast("string"))
+        proxy_state = None
         if self.options.proxy_config is not None:
-            claimed = self._assign_proxies(claimed)
+            claimed, proxy_state = self._assign_proxies(claimed)
         claimed = claimed.localCheckpoint(eager=True)  # pin the claim set
         # one aggregate gives the claim count AND the exact url byte mass the
         # fetch-join prune would broadcast, for sizing.fits_broadcast
@@ -624,7 +600,7 @@ class CrawlEngine:
             F.count("*").alias("n"),
             F.sum(F.octet_length("url")).alias("url_bytes"),
         ).collect()[0]
-        return claimed, stats["n"], int(stats["url_bytes"] or 0)
+        return claimed, stats["n"], int(stats["url_bytes"] or 0), proxy_state
 
     def _commit_lease(self, claimed: DataFrame, round_id: int) -> None:
         """O5 lease stamp: commit the claimed set as a mid-round delta
@@ -958,11 +934,17 @@ class CrawlEngine:
         return links.filter(F.col("url").isNotNull())
 
     def _write_side_outputs(
-        self, classified: DataFrame, gate_skipped: DataFrame | None, round_id: int
+        self,
+        classified: DataFrame,
+        gate_skipped: DataFrame | None,
+        proxy_state: DataFrame | None,
+        round_id: int,
     ) -> None:
-        """Side outputs phase: the round's skipped, results, failed-handler
-        and outcome-log appends, and the proxy and session state."""
-        # skip side-output (F8 handleSkippedRequest), ONE append per round:
+        """Side outputs phase: stage the round's skipped, results,
+        failed-handler and outcome-log versions and the proxy and session
+        state. The outcome commit publishes them with the round."""
+        stage = self.store.stage
+        # skip side-output (F8 handleSkippedRequest), ONE version per round:
         # redirect-strategy skips (reason 'redirect') and fetch-time robots
         # skips (reason 'robotsTxt', basic-crawler.ts:1626-1638 — SKIPPED +
         # handled, never failed), plus the link gate's rejections
@@ -974,15 +956,13 @@ class CrawlEngine:
         )
         if gate_skipped is not None:
             skipped = skipped.unionByName(gate_skipped)
-        skipped.withColumn("round_id", F.lit(round_id)).write.mode("append").parquet(
-            self.skipped_dir
-        )
-        # results dataset append (S7) of the successes, which already carry
+        stage("skipped", skipped.withColumn("round_id", F.lit(round_id)))
+        # results dataset (S7) of the successes, which already carry
         # extracted text + links — plus any extra columns the user's
         # per-label handlers produced (the requestHandler's pushData analog)
-        (
-            classified.filter(F.col("_outcome") == "success")
-            .select(
+        stage(
+            "results",
+            classified.filter(F.col("_outcome") == "success").select(
                 "request_id",
                 "url",
                 # request.loadedUrl = response.url (redirect-aware final URL);
@@ -997,41 +977,42 @@ class CrawlEngine:
                 "label",
                 F.lit(round_id).alias("round_id"),
                 *self._handler_extra_names,
-            )
-            .write.mode("append")
-            .parquet(self.results_dir)
+            ),
         )
         # failedRequestHandler: the round's finalized failures, error list
         # already carrying the final error (basic-crawler.ts:1953-1965)
         if self.options.failed_request_handler is not None:
-            self._apply_failed_handler(classified, round_id)
-        # outcomes log append. Robots skips never reach the log: the
-        # reference returns BEFORE stats.startJob (basic-crawler.ts:1626-1638),
-        # so they appear in no Statistics series — only in the skipped
+            stage("failed_handled", self._failed_handled_rows(classified, round_id))
+        # outcome log. Robots skips never reach the log: the reference
+        # returns BEFORE stats.startJob (basic-crawler.ts:1626-1638), so
+        # they appear in no Statistics series — only in the skipped
         # side-output and the queue's handled count.
         logged = classified.filter(F.col("_outcome") != "skip_robots")
-        logged.select(
-            "request_id",
-            "url",
-            F.lit(round_id).alias("round_id"),
-            F.col("retry_count").alias("attempt"),
-            _logged_outcome(),
-            F.col("status_code").cast("int").alias("status_code"),
-            (F.lit(10) + F.pmod(F.xxhash64("request_id", F.lit(round_id)), F.lit(90))).alias("duration_ms"),
-            F.col("_error").alias("error_message"),
-            F.col("session_id"),
-            # proxyInfo surface (proxy_configuration.ts:80-115): recorded
-            # per attempt when a proxy policy is configured
-            *(
-                [F.col("proxy_tier"), F.col("proxy_url")]
-                if self.options.proxy_config is not None
-                else []
+        stage(
+            "outcomes",
+            logged.select(
+                "request_id",
+                "url",
+                F.lit(round_id).alias("round_id"),
+                F.col("retry_count").alias("attempt"),
+                _logged_outcome(),
+                F.col("status_code").cast("int").alias("status_code"),
+                (F.lit(10) + F.pmod(F.xxhash64("request_id", F.lit(round_id)), F.lit(90))).alias("duration_ms"),
+                F.col("_error").alias("error_message"),
+                F.col("session_id"),
+                # proxyInfo surface (proxy_configuration.ts:80-115): recorded
+                # per attempt when a proxy policy is configured
+                *(
+                    [F.col("proxy_tier"), F.col("proxy_url")]
+                    if self.options.proxy_config is not None
+                    else []
+                ),
             ),
-        ).write.mode("append").parquet(self.outcomes_dir)
-        if self.options.proxy_config is not None and getattr(
-            self.options.proxy_config, "tiered_proxy_urls", ()
-        ):
-            self._update_proxy_last(classified)
+        )
+        if proxy_state is not None:
+            stage("proxy_state", proxy_state, replace=True)
+        if getattr(self.options.proxy_config, "tiered_proxy_urls", ()):
+            stage("proxy_last", self._proxy_last(classified), replace=True)
         if self.session_policy is not None:
             # C6 reputation + cookie jars: when the source carries raw
             # Set-Cookie headers (array<string> ``set_cookie``), each
@@ -1042,7 +1023,11 @@ class CrawlEngine:
             if "set_cookie" in classified.columns:
                 sess_cols += [F.col("set_cookie"), F.abs(F.col("order_no")).alias("_ord")]
                 kw = {"cookie_col": "set_cookie", "order_col": "_ord"}
-            self._update_sessions(logged.select(*sess_cols), round_id, **kw)
+            pool = update_pool(
+                self.session_pool(), logged.select(*sess_cols), self.session_policy, **kw
+            )
+            pool = replenish_pool(self.spark, pool, round_id, self.session_policy)
+            stage("sessions", pool, replace=True)
 
     def _commit_outcomes(
         self,
@@ -1253,11 +1238,11 @@ class CrawlEngine:
             ).otherwise(F.col("_outcome")),
         )
 
-    def _apply_failed_handler(self, classified: DataFrame, round_id: int) -> None:
+    def _failed_handled_rows(self, classified: DataFrame, round_id: int) -> DataFrame:
         """failedRequestHandler (basic-crawler.ts:1953-1965), set-wise over
         the round's finalized failures; the input's error_messages carries
         the final error (pushed at the top of the reference's error path).
-        Rows the handler returns append to ``<root>/failed_handled``."""
+        Returns the rows the handler returns, stamped with the round."""
         fn = self.options.failed_request_handler
         schema = self.options.failed_handler_schema
         failed = classified.filter(F.col("_outcome") == "fail")
@@ -1281,12 +1266,7 @@ class CrawlEngine:
                     out[fld.name] = res[fld.name] if fld.name in res.columns else None
                 yield out
 
-        (
-            handler_in.mapInPandas(gen, schema=schema)
-            .withColumn("round_id", F.lit(round_id))
-            .write.mode("append")
-            .parquet(os.path.join(self.store.root, "failed_handled"))
-        )
+        return handler_in.mapInPandas(gen, schema=schema).withColumn("round_id", F.lit(round_id))
 
     # -- full crawl -------------------------------------------------------------
     def run(self, seeds: DataFrame | None = None) -> dict:

@@ -23,6 +23,8 @@ Storage: parquet base snapshots and delta directories + a JSON manifest
 is a MERGE INTO commit and resume reads the last committed state. The
 snapshot layout keeps the same two properties the engine needs from Iceberg:
 transactional read-your-writes between rounds, and time-travel for resume.
+The manifest swap is the ONLY commit point, side tables included (``stage``
+/ ``table``).
 
 Scale notes (10^10-row frontier):
 - the frontier is hash-distributed by ``request_id`` (dedup join key), so the
@@ -37,8 +39,10 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -99,6 +103,9 @@ STATE_SKIPPED = 7
 # ``registrable_domain`` column is never trusted; both derive from ``url``.
 PINNED_DOMAIN_COL = "_registrable_domain"
 URL_KEY_COLS = ("unique_key", PINNED_DOMAIN_COL)
+
+# a table version's directory name (no ``=``: Spark infers no partition column)
+_VERSION_RE = re.compile(r"^r\d+-[0-9a-f]{32}$")
 
 
 def with_url_keys(df: DataFrame) -> DataFrame:
@@ -183,7 +190,8 @@ class FrontierStore:
 
     The manifest carries the driver-side scalars that make runs deterministic
     and resumable: the monotonic ``order_seq`` (replaces Date.now() orderNo),
-    the round counter, and budget accounting.
+    the round counter, and budget accounting, and its ``tables`` map lists
+    the committed versions of the caller's side tables.
     """
 
     spark: SparkSession
@@ -193,6 +201,8 @@ class FrontierStore:
     _manifest: dict = field(default_factory=dict, repr=False)
     # the new rows the last ``prepare_fresh`` budget cut, as ``url`` rows
     over_budget: DataFrame | None = field(default=None, init=False, repr=False)
+    # (name, version dir relative to root, replace) written but not yet published
+    _staged: list = field(default_factory=list, init=False, repr=False)
 
     MANIFEST = "manifest.json"
 
@@ -234,6 +244,12 @@ class FrontierStore:
         return os.path.join(self.root, "snapshots", f"v{snap:06d}")
 
     def _write_manifest(self):
+        """Publish every staged table version and swap the manifest — the
+        commit point of everything written since the last swap."""
+        tables = self._manifest.setdefault("tables", {})
+        for name, version, replace in self._staged:
+            tables[name] = [version] if replace else [*tables.get(name, []), version]
+        self._staged = []
         path = os.path.join(self.root, self.MANIFEST)
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
@@ -275,6 +291,35 @@ class FrontierStore:
 
     def _deltas_broadcastable(self) -> bool:
         return fits_broadcast(*self._outstanding_delta_stats())
+
+    # -- side tables ----------------------------------------------------------
+    def stage(self, name: str, df: DataFrame, *, replace: bool = False) -> None:
+        """Write ``df`` as a new version of table ``name``; the next manifest
+        write publishes it (``replace=True``: as the table's only version).
+        Until then no reader sees it, so a crash before the commit leaves
+        the table as it was."""
+        version = os.path.join(name, f"r{self.round}-{uuid.uuid4().hex}")
+        df.write.parquet(os.path.join(self.root, version))
+        self._staged.append((name, version, replace))
+
+    def table(self, name: str, empty) -> DataFrame:
+        """The union of table ``name``'s committed versions; before its
+        first commit, ``empty`` (a frame, or the schema of an empty one)."""
+        versions = self._manifest.get("tables", {}).get(name, [])
+        if versions:
+            return self.spark.read.parquet(*[os.path.join(self.root, v) for v in versions])
+        return empty if isinstance(empty, DataFrame) else self.spark.createDataFrame([], empty)
+
+    def _drop_unpublished_versions(self) -> None:
+        """Delete every table version directory the manifest does not list
+        (run right after a manifest write, so nothing is staged): a crashed
+        round's writes and superseded state versions."""
+        live = {v for vs in self._manifest["tables"].values() for v in vs}
+        for name in os.listdir(self.root):
+            d = os.path.join(self.root, name)
+            for v in os.listdir(d) if os.path.isdir(d) else ():
+                if _VERSION_RE.match(v) and os.path.join(name, v) not in live:
+                    shutil.rmtree(os.path.join(d, v), ignore_errors=True)
 
     # -- table I/O -----------------------------------------------------------
     def read(self, columns: list[str] | None = None) -> DataFrame:
@@ -384,18 +429,21 @@ class FrontierStore:
                 "partitions": sorted(lineage, key=lambda x: x["file"]),
             }
         )
-        # a full snapshot supersedes any outstanding deltas
-        for seq in self._manifest.get("deltas", []):
-            shutil.rmtree(self._delta_dir(seq), ignore_errors=True)
+        # a full snapshot supersedes any outstanding deltas; their files go
+        # only after the manifest no longer lists them
+        superseded = self._manifest.get("deltas", [])
         self._manifest["deltas"] = []
         self._manifest["delta_rows"] = {}
         self._manifest["delta_id_bytes"] = {}
         self._write_manifest()
+        for seq in superseded:
+            shutil.rmtree(self._delta_dir(seq), ignore_errors=True)
         # retire old snapshots beyond a small retention window
         keep_from = snap - 3
         old = self._snapshot_dir(keep_from - 1)
         if keep_from > 0 and os.path.exists(old):
             shutil.rmtree(old, ignore_errors=True)
+        self._drop_unpublished_versions()
         return snap
 
     def commit_delta(

@@ -48,7 +48,7 @@ from dataclasses import dataclass
 from typing import Iterable
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -156,10 +156,6 @@ TRACKER_STATE_SCHEMA = T.StructType(
         T.StructField("next_idx", T.IntegerType(), False),
     ]
 )
-
-
-def empty_tracker_state(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], TRACKER_STATE_SCHEMA)
 
 
 def predict_proxy_tiers(

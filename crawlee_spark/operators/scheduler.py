@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -135,25 +135,37 @@ def global_row_number(
     if approx_rows is not None and approx_rows <= SINGLE_TASK_RANK_MAX_ROWS:
         w = Window.orderBy(order_col)
         return df.withColumn(col_name, F.row_number().over(w).cast("long"))
+    return global_running_total(
+        df, order_col, F.count(F.lit(1)), col_name=col_name, partitions=partitions
+    )
+
+
+def global_running_total(
+    df: DataFrame, order_col: str, agg: Column, *, col_name: str, partitions: int = 32
+) -> DataFrame:
+    """Running ``agg`` (a count or a sum) in ``order_col`` order, this row
+    included: ``global_row_number``'s two phases with ``agg`` as both the
+    per-partition total and the partitioned window. ``order_col`` must be
+    unique."""
     parted = (
         df.repartitionByRange(partitions, F.col(order_col))
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint(eager=True)  # pin: offsets must match the ranked frame
     )
-    counts = {
-        int(r["_pid"]): int(r["n"])
-        for r in parted.groupBy("_pid").agg(F.count("*").alias("n")).collect()
+    totals = {
+        int(r["_pid"]): int(r["t"] or 0)
+        for r in parted.groupBy("_pid").agg(agg.alias("t")).collect()
     }
-    if not counts:
+    if not totals:
         return parted.drop("_pid").withColumn(col_name, F.lit(None).cast("long"))
     offsets, acc = {}, 0
-    for pid in sorted(counts):
+    for pid in sorted(totals):
         offsets[pid] = acc
-        acc += counts[pid]
+        acc += totals[pid]
     off = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
     w = Window.partitionBy("_pid").orderBy(order_col)
     return parted.withColumn(
-        col_name, (F.row_number().over(w) + off[F.col("_pid")]).cast("long")
+        col_name, (agg.over(w) + off[F.col("_pid")]).cast("long")
     ).drop("_pid")
 
 

@@ -92,24 +92,6 @@ def final_statistics(outcomes: DataFrame, runtime_millis: int | None = None) -> 
     return out
 
 
-def error_summary(outcomes: DataFrame) -> DataFrame:
-    """ErrorTracker analog (packages/core/src/crawlers/error_tracker.ts):
-    group failures by a GENERALIZED message — digit runs collapsed to ``#``,
-    the tracker's number-wildcard idea — so 'status 503 (attempt 2)' and
-    'status 503 (attempt 3)' land in one group. One aggregation over the
-    outcome log; no mutable tracker state.
-
-    Output: (error_group, occurrences, requests, first_round, example)."""
-    errs = outcomes.filter(F.col("error_message").isNotNull())
-    norm = F.regexp_replace(F.col("error_message"), r"\d+", "#")
-    return errs.groupBy(norm.alias("error_group")).agg(
-        F.count("*").alias("occurrences"),
-        F.countDistinct("request_id").alias("requests"),
-        F.min("round_id").alias("first_round"),
-        F.min("error_message").alias("example"),
-    )
-
-
 def _find_biggest_word_intersection(a: list, b: list) -> tuple:
     """Longest common word streak between two tokenized messages
     (error_tracker.ts:115-147): returns (max_streak, a_index, b_index)."""
@@ -170,7 +152,7 @@ def error_message_groups(
     golden vectors from test/core/error_tracker.test.ts placeholder #1-#9):
     messages collapse into word-streak placeholder patterns ('Expected
     boolean, got _'), but messages that would be >= 50% placeholder stay
-    separate — the fidelity ``error_summary``'s cheap digit-wildcard lacks.
+    separate (a digit wildcard would merge 'status 404' and 'status 503').
 
     Spark shape: occurrences are pre-aggregated per DISTINCT first-line
     message (one map-side-combinable groupBy over the 100-TB outcome log);

@@ -257,9 +257,7 @@ def test_error_handler_no_retry_finalizes_failure(spark, tmp_store_dir):
     engine.run(None)
     row = {r["url"]: r for r in engine.store.read().collect()}["https://h1.example.com/a"]
     assert row["failed"] and row["retry_count"] == 0  # no retry ever consumed
-    import os
-
-    failed_out = spark.read.parquet(os.path.join(engine.store.root, "failed_handled")).collect()
+    failed_out = engine.failed_handled().collect()
     assert len(failed_out) == 1
     assert failed_out[0]["url"] == "https://h1.example.com/a"
     assert failed_out[0]["n_errors"] == 1

@@ -355,8 +355,9 @@ def test_plain_round_runs_as_named_phases(spark, tmp_path_factory):
     outputs → outcome commit (a plain round has no hooks phase actions, and
     fetch + classify is lazy: its plan runs in the extraction checkpoint).
     Every action a plain round with robots takes is pinned to its phase;
-    ``skipped/`` is written once per round (fetch-time and link-gate skips
-    in one append), and the round still runs exactly 2 Python passes."""
+    the side outputs are staged table versions (``skipped/`` once per round:
+    fetch-time and link-gate skips in one version) that the outcome commit
+    publishes, and the round still runs exactly 2 Python passes."""
     from crawlee_spark.operators.engine import CrawlEngine, CrawlOptions
     from crawlee_spark.sources.fixtures import make_pages, make_pages_rows, make_robots, make_seeds
     from tests.plan_capture import capture_actions
@@ -383,11 +384,15 @@ def test_plain_round_runs_as_named_phases(spark, tmp_path_factory):
         ("localCheckpoint", "engine._enqueue"),  # the link pin
         ("localCheckpoint", "frontier.prepare_fresh"),
         ("collect", "frontier.prepare_fresh"),
-        ("parquet", "engine._write_side_outputs"),  # skipped
-        ("parquet", "engine._write_side_outputs"),  # results
-        ("parquet", "engine._write_side_outputs"),  # outcomes
+        ("parquet", "frontier.stage"),  # skipped
+        ("parquet", "frontier.stage"),  # results
+        ("parquet", "frontier.stage"),  # outcomes
         ("parquet", "frontier.commit_delta"),  # the outcome delta
     ]
-    writes = [a.target for a in taken if a.kind == "parquet" and a.caller.startswith("engine.")]
-    assert writes == [engine.skipped_dir, engine.results_dir, engine.outcomes_dir]
+    writes = [
+        os.path.relpath(os.path.dirname(a.target), store.root)
+        for a in taken
+        if a.caller == "frontier.stage"
+    ]
+    assert writes == ["skipped", "results", "outcomes"]
     assert sum(len(a.python) for a in taken) == 2

@@ -20,8 +20,8 @@ from pyspark.sql import functions as F
 
 from crawlee_spark.operators.proxies import (
     ProxyConfiguration,
+    TRACKER_STATE_SCHEMA,
     ProxyTierTracker,
-    empty_tracker_state,
     predict_proxy_tiers,
     rotate_proxies,
     split_assignments,
@@ -177,7 +177,7 @@ def test_predict_tiers_no_unpartitioned_window(spark):
         [("r1", "d.com", 1, None)],
         "request_id string, domain string, order_no long, last_proxy_tier int",
     )
-    plan = predict_proxy_tiers(att, TIERS, state=empty_tracker_state(spark))._jdf.queryExecution().executedPlan().toString()
+    plan = predict_proxy_tiers(att, TIERS, state=spark.createDataFrame([], TRACKER_STATE_SCHEMA))._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
     assert "FlatMapGroupsInPandas" in plan
 
@@ -213,7 +213,7 @@ def test_engine_tiered_escalation_end_to_end(spark, tmp_store_dir):
         ProxyConfiguration(tiered_proxy_urls=TIERS),
     )
     engine.run(make_seeds(spark, make_pages_rows(40)))
-    att = spark.read.parquet(engine.outcomes_dir)
+    att = engine.outcomes()
     assert "proxy_tier" in att.columns and "proxy_url" in att.columns
     assert att.filter(F.col("proxy_url").isNull()).count() == 0
     host = F.regexp_extract("url", r"https?://([^/]+)/", 1)
@@ -258,7 +258,7 @@ def test_engine_plain_sticky_per_session(spark, tmp_store_dir):
         session_policy=SessionPolicy(max_pool_size=4),
     )
     engine.run(make_seeds(spark, make_pages_rows(40)))
-    att = spark.read.parquet(engine.outcomes_dir)
+    att = engine.outcomes()
     per_session = (
         att.filter(F.col("session_id").isNotNull())
         .groupBy("session_id")
@@ -278,8 +278,8 @@ def test_engine_plain_no_sessions_no_state_growth(spark, tmp_store_dir):
         ProxyConfiguration(proxy_urls=("http://p0", "http://p1")),
     )
     engine.run(make_seeds(spark, make_pages_rows(40)))
-    att = spark.read.parquet(engine.outcomes_dir)
+    att = engine.outcomes()
     assert att.filter(F.col("proxy_url").isNull()).count() == 0
-    state = spark.read.parquet(engine.proxy_state_dir)
+    state = engine.store.table("proxy_state", "draws long")
     assert state.count() == 1 and state.columns == ["draws"]
     assert state.collect()[0]["draws"] == att.count()

@@ -92,25 +92,6 @@ def test_engine_runtime_accumulates_across_resume(spark, tmp_path):
     assert s2["crawlerRuntimeMillis"] > s1["crawlerRuntimeMillis"]
 
 
-def test_error_summary_groups_generalized_messages(spark):
-    from crawlee_spark.operators.stats import OUTCOME_SCHEMA, error_summary
-
-    rows = [
-        ("r1", "https://a/1", 1, 0, "retry", 503, 10, "Request failed with status 503", None),
-        ("r1", "https://a/1", 2, 1, "retry", 503, 10, "Request failed with status 503", None),
-        ("r2", "https://a/2", 1, 0, "fail", 404, 10, "Request failed with status 404", None),
-        ("r3", "https://a/3", 1, 0, "fail", None, 10, "Fetch failed: page not found in source", None),
-        ("r4", "https://a/4", 3, 0, "success", 200, 10, None, None),
-    ]
-    out = spark.createDataFrame(rows, OUTCOME_SCHEMA)
-    got = {r["error_group"]: r for r in error_summary(out).collect()}
-    # 503 and 404 generalize into ONE status group (number wildcard)
-    grp = got["Request failed with status #"]
-    assert grp["occurrences"] == 3 and grp["requests"] == 2 and grp["first_round"] == 1
-    assert got["Fetch failed: page not found in source"]["occurrences"] == 1
-    assert len(got) == 2  # successes contribute nothing
-
-
 def test_merge_error_messages_golden_vectors():
     """Reference golden vectors, test/core/error_tracker.test.ts placeholder
     #1-#9: word-streak placeholder merging with the >= 50% generality cap."""
