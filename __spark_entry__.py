@@ -1461,7 +1461,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_curation": q_corpus_curation,
         "crawl_quality_rollup": q_crawl_quality_rollup,
         "ann_cosine_topk": q_ann_cosine_topk,
-        "ann_quantized_topk": q_ann_quantized_topk,
         "ann_lsh_topk": q_ann_lsh_topk,
         "ann_ivf_topk": q_ann_ivf_topk,
         "ann_ivf_index": q_ann_ivf_index,
@@ -1473,13 +1472,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "anti_join_inactive": q_anti_join_inactive,
         "window_segment_head": q_window_segment_head,
         "events_sessionize": q_events_sessionize,
-        "global_rank": q_global_rank,
         "session_cookies": q_session_cookies,
-        "sitemap_gz": q_sitemap_gz,
         "request_handlers": q_request_handlers,
-        "handler_enqueue": q_handler_enqueue,
         "proxy_rotation": q_proxy_rotation,
-        "proxy_tiers": q_proxy_tiers,
         "error_groups": q_error_groups,
         "gopher_quality": q_gopher_quality,
         "corpus_split": q_corpus_split,
@@ -1492,6 +1487,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "benchmark_contamination": q_benchmark_contamination,
         "dup_clusters": q_dup_clusters,
         "domain_mixture": q_domain_mixture,
+        "sitemap_gz": q_sitemap_gz,
+        "global_rank": q_global_rank,
+        "proxy_tiers": q_proxy_tiers,
+        "handler_enqueue": q_handler_enqueue,
+        "ann_quantized_topk": q_ann_quantized_topk,
     }
 
 

@@ -32,7 +32,7 @@ Retry policy (basic-crawler.ts:1881-1941):
 
 Determinism: no wall clock anywhere — order_no is a driver sequence,
 leases are round numbers, handled_at derives from warc-epoch + round.
-A killed run resumes from the last committed snapshot and replays the
+A killed run resumes from the last committed manifest and replays the
 round identically (tested in tests/test_engine.py::test_resume).
 """
 

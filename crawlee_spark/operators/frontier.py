@@ -27,10 +27,12 @@ The manifest swap is the ONLY commit point, side tables included (``stage``
 / ``table``).
 
 Scale notes (10^10-row frontier):
-- the frontier is hash-distributed by ``request_id`` (dedup join key), so the
-  anti-join is a co-partitioned shuffle; AQE handles skew.
-- per-round writes are merge-on-read deltas of the rows the round touched,
-  compacted into a new base snapshot every ``compact_every`` deltas.
+- every write — an enqueue batch or a round — is a merge-on-read delta of the
+  rows it touched; compaction (every ``compact_every`` deltas) is the only
+  writer of a base snapshot.
+- compaction writes the base ``repartition(N, request_id)``, but Spark keeps
+  no bucket metadata for a plain parquet write: once the seen-set id side
+  outgrows the broadcast threshold, the anti-join shuffles both sides.
 - ``html`` never enters the frontier — scheduling reads only narrow columns
   (Catalyst prunes the parquet scan to the scheduling columns).
 """
@@ -41,7 +43,6 @@ import json
 import os
 import re
 import shutil
-import time
 import uuid
 from dataclasses import dataclass, field
 
@@ -179,19 +180,22 @@ class FrontierStore:
     """Merge-on-read (MOR) frontier table: a base snapshot, delta files and a
     JSON manifest.
 
-    Each round commits only the rows it touched (``commit_delta``,
-    O(claimed+fresh)) and reads resolve last-writer-wins; every
-    ``compact_every`` deltas the full-snapshot ``commit`` rewrites the base.
-    At the design point (10^10-row frontier) a full rewrite per round is
-    ~2 TB of writes for a few hundred MB of change. MOR reads anti-join the
-    base against the outstanding delta ids, broadcast when
+    Every write commits only the rows it touched (``commit_delta``:
+    O(claimed+fresh) for a round, O(batch) for ``add_requests``) and reads
+    resolve last-writer-wins; at every ``compact_every``-th delta the
+    compaction ``commit`` rewrites the base — the only snapshot writer. At
+    the design point (10^10-row frontier) a full rewrite per round is ~2 TB
+    of writes for a few hundred MB of change. MOR reads anti-join the base
+    against the outstanding delta ids, broadcast when
     ``sizing.fits_broadcast`` admits the manifest's delta row and id-byte
     counts.
 
-    The manifest carries the driver-side scalars that make runs deterministic
-    and resumable: the monotonic ``order_seq`` (replaces Date.now() orderNo),
-    the round counter, and budget accounting, and its ``tables`` map lists
-    the committed versions of the caller's side tables.
+    The manifest holds current state only: the driver-side scalars that
+    make runs deterministic and resumable (the monotonic ``order_seq``,
+    which replaces Date.now() orderNo, the round counter and the queue
+    counters), the outstanding deltas, the base's per-file ``lineage``, and
+    the ``tables`` map of the committed versions of the caller's side
+    tables.
     """
 
     spark: SparkSession
@@ -225,7 +229,7 @@ class FrontierStore:
                 "handled_total": 0,
                 "failed_total": 0,
                 "total_requests": 0,
-                "history": [],
+                "lineage": [],  # per-file rows/handled/failed of the base
                 "deltas": [],  # MOR delta seqs since the last base snapshot
                 "delta_rows": {},  # seq (str) -> row count, for broadcast sizing
                 "delta_id_bytes": {},  # seq (str) -> request_id byte mass
@@ -269,9 +273,9 @@ class FrontierStore:
         however large the delta). Backfill a missing entry with a one-time
         scan of that delta file — cached in the manifest dict and persisted
         at the next manifest write."""
-        dr = self._manifest.setdefault("delta_rows", {})
-        db = self._manifest.setdefault("delta_id_bytes", {})
-        deltas = self._manifest.get("deltas", [])
+        dr = self._manifest["delta_rows"]
+        db = self._manifest["delta_id_bytes"]
+        deltas = self._manifest["deltas"]
         for seq in deltas:
             if str(seq) not in dr or str(seq) not in db:
                 row = (
@@ -341,7 +345,7 @@ class FrontierStore:
         ``columns`` prunes the merge so monitoring reads (counters,
         is_finished) keep parquet column pruning."""
         snap = self._manifest["snapshot"]
-        deltas = self._manifest.get("deltas", [])
+        deltas = self._manifest["deltas"]
         want = None
         if columns is not None:
             want = ["request_id"] + [c for c in columns if c != "request_id"]
@@ -379,12 +383,15 @@ class FrontierStore:
             ids = F.broadcast(ids)
         return base.join(ids, "request_id", "left_anti").unionByName(merged)
 
-    def commit(self, df: DataFrame, *, round_increment: bool = False, extra: dict | None = None) -> int:
-        """Write a new snapshot and atomically advance the manifest.
+    def commit(self, df: DataFrame) -> int:
+        """Compaction: write ``df`` (the whole frontier) as the new base
+        snapshot, supersede the outstanding deltas and atomically advance the
+        manifest. ``commit_delta`` calls it with ``read()``.
 
-        The frontier is repartitioned by ``request_id`` so the next round's
-        anti-join and claim reads are well distributed (Iceberg analog:
-        ``bucket(N, request_id)`` partition spec)."""
+        The base is written ``repartition(N, request_id)`` so its files are
+        evenly sized; this is NOT an Iceberg ``bucket(N, request_id)`` spec —
+        Spark records no bucketing for the write, so a join on
+        ``request_id`` still shuffles the base once broadcast is ruled out."""
         snap = self._manifest["snapshot"] + 1
         out_dir = self._snapshot_dir(snap)
         (
@@ -393,13 +400,9 @@ class FrontierStore:
             .parquet(out_dir)
         )
         self._manifest["snapshot"] = snap
-        if round_increment:
-            self._manifest["round"] += 1
-        if extra:
-            self._manifest.update(extra)
-        # per-partition lineage: rows + handled/failed counts per written
-        # file, so every snapshot records which partitions this round touched
-        # and how (the Iceberg analog reads this from data-file stats)
+        # per-file lineage of the base: rows + handled/failed counts per
+        # written file (the Iceberg analog reads this from data-file stats);
+        # each compaction replaces it
         lineage = [
             {
                 "file": os.path.basename(r["file"]),
@@ -421,17 +424,10 @@ class FrontierStore:
         self._manifest["total_requests"] = sum(p["rows"] for p in lineage)
         self._manifest["handled_total"] = sum(p["handled"] for p in lineage)
         self._manifest["failed_total"] = sum(p["failed"] for p in lineage)
-        self._manifest["history"].append(
-            {
-                "snapshot": snap,
-                "round": self._manifest["round"],
-                "wall": time.time(),
-                "partitions": sorted(lineage, key=lambda x: x["file"]),
-            }
-        )
+        self._manifest["lineage"] = sorted(lineage, key=lambda x: x["file"])
         # a full snapshot supersedes any outstanding deltas; their files go
         # only after the manifest no longer lists them
-        superseded = self._manifest.get("deltas", [])
+        superseded = self._manifest["deltas"]
         self._manifest["deltas"] = []
         self._manifest["delta_rows"] = {}
         self._manifest["delta_id_bytes"] = {}
@@ -449,15 +445,18 @@ class FrontierStore:
     def commit_delta(
         self, changed: DataFrame, *, round_increment: bool = False, extra: dict | None = None
     ) -> int:
-        """Merge-on-read commit: write ONLY the rows this round touched
-        (claimed-row state transitions + freshly enqueued rows).
+        """Merge-on-read commit — the frontier's only commit path: write ONLY
+        the rows a write touched (a round's claimed-row state transitions +
+        freshly enqueued rows, or an ``add_requests`` batch).
 
         Per-round write cost becomes O(claimed + fresh) instead of
         O(frontier) — the difference between a 2 TB rewrite per round and a
         few hundred MB at a 10^10-row frontier. ``read()`` resolves the
-        latest version per request_id; every ``compact_every`` deltas the
-        base is rewritten (Iceberg: data-file compaction)."""
-        deltas = self._manifest.setdefault("deltas", [])
+        latest version per request_id; at every ``compact_every``-th delta
+        the base is rewritten (``commit``; Iceberg: data-file compaction).
+        ``round_increment`` advances the round counter and ``extra`` updates
+        manifest fields, both in the same manifest swap."""
+        deltas = self._manifest["deltas"]
         seq = (deltas[-1] + 1) if deltas else 0
         out_dir = self._delta_dir(seq)
         changed = changed.select(*[f.name for f in FRONTIER_SCHEMA.fields])
@@ -472,18 +471,9 @@ class FrontierStore:
             self._manifest["round"] += 1
         if extra:
             self._manifest.update(extra)
-        _dstats = obs.get
-        n_changed = _dstats["n"]
-        self._manifest.setdefault("delta_rows", {})[str(seq)] = n_changed
-        self._manifest.setdefault("delta_id_bytes", {})[str(seq)] = int(_dstats["b"] or 0)
-        self._manifest["history"].append(
-            {
-                "delta": seq,
-                "round": self._manifest["round"],
-                "wall": time.time(),
-                "rows_touched": n_changed,
-            }
-        )
+        stats = obs.get
+        self._manifest["delta_rows"][str(seq)] = stats["n"]
+        self._manifest["delta_id_bytes"][str(seq)] = int(stats["b"] or 0)
         if len(deltas) >= self.compact_every:
             # compaction: one full rewrite absorbs the deltas (commit clears them)
             return self.commit(self.read())
@@ -500,7 +490,8 @@ class FrontierStore:
     ) -> DataFrame:
         """Dedup + order candidate requests; returns ONLY the fresh rows
         (pinned via localCheckpoint), advancing the order sequence. The caller
-        unions them into its next commit (engine) or ``add_requests`` does.
+        commits them in its next delta (the engine's outcome delta, or
+        ``add_requests``).
 
         Semantics of request_provider.ts:291-404 / request-queue.ts:428-497 as
         one set operation:
@@ -551,7 +542,8 @@ class FrontierStore:
             .select("request_id", "_row.*")
         )
         # (2) seen-set dedup: exact left-anti join against the frontier (the
-        # base ⋉ delta ids ∪ deltas read, shuffled on request_id)
+        # base ⋉ delta ids ∪ deltas read; Catalyst broadcasts the id side
+        # while it fits its threshold, else shuffles both sides)
         fresh = deduped.join(frontier.select("request_id"), "request_id", "left_anti")
         # pin the narrow new rows ONCE (monotonically_increasing_id is
         # partition-dependent, so the stats pass, the budget cut and the
@@ -606,13 +598,11 @@ class FrontierStore:
         *,
         forefront: bool = False,
         max_new: int | None = None,
-    ) -> DataFrame:
-        """Public enqueue: dedup + order + append + commit; returns the new
-        frontier (the direct-queue contract of request_provider.ts:206-275)."""
-        fresh = self.prepare_fresh(candidates, forefront=forefront, max_new=max_new)
-        new_frontier = self.read().unionByName(fresh)
-        self.commit(new_frontier)
-        return new_frontier
+    ) -> None:
+        """Public enqueue (the direct-queue contract of
+        request_provider.ts:206-275): dedup + order, then commit the fresh
+        rows as one delta."""
+        self.commit_delta(self.prepare_fresh(candidates, forefront=forefront, max_new=max_new))
 
     # -- queue metadata (aggregate view, request-queue.ts:596-610) ------------
     def info(self, *, exact: bool = False) -> dict:

@@ -7,7 +7,7 @@ deployments where URLs/outcomes arrive continuously:
 
 - ``stream_enqueue`` — a ``foreachBatch`` sink that runs every micro-batch
   of discovered URLs through the exact ``FrontierStore`` enqueue (keying →
-  in-batch dedup → anti-join vs seen-set → order assignment → snapshot
+  in-batch dedup → anti-join vs seen-set → order assignment → delta
   commit). The idempotent anti-join makes replayed batches safe — exactly
   the property Structured Streaming needs from a sink (at-least-once input,
   exactly-once effect).
@@ -19,7 +19,7 @@ deployments where URLs/outcomes arrive continuously:
   ``session_window`` — the event-time form of the batch sessionize query.
 
 Checkpointing: every writer takes a ``checkpoint_dir``; Spark's offset log +
-the frontier's own snapshot manifest together give resume-from-kill with no
+the frontier's own manifest together give resume-from-kill with no
 duplicate enqueues (the anti-join absorbs the overlap window).
 """
 

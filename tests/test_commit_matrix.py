@@ -10,7 +10,8 @@ of it and the crashed round — and resuming must not log an attempt twice.
 The fixture round 2 exercises every side table and compacts: robots (a
 link-gate skip), a 503 retry (proxy_last), a 404 fail with a
 failed_request_handler, a session pool and tiered proxies, compact_every=4
-(seed snapshot, then the lease and outcome deltas of rounds 1 and 2).
+(the seeds are the first delta and each round adds a lease and an outcome
+delta, so round 2's lease commit is the fourth delta and compacts).
 """
 
 import os
@@ -136,8 +137,9 @@ def _round_with_crash(monkeypatch, engine, k: int | None) -> list[str]:
 
 @pytest.fixture(scope="module")
 def matrix(spark, tmp_path_factory):
-    """The store after round 1, the views before and after round 2, and
-    round 2's write and commit calls."""
+    """The store after round 1 (the seed delta and round 1's two deltas, no
+    base yet), the views before and after round 2, and round 2's write and
+    commit calls (its lease commit compacts)."""
     base = tmp_path_factory.mktemp("crash-matrix")
     round1 = str(base / "round1")
     engine = _engine(spark, round1)

@@ -30,27 +30,26 @@ def claim_one(store, round_id):
 
 
 def mark_handled(store, request_id, round_id):
-    f = store.read().withColumn(
-        "handled_at",
-        F.when(
-            F.col("request_id") == request_id,
-            F.to_timestamp(F.lit("2026-01-01 00:00:00")),
-        ).otherwise(F.col("handled_at")),
+    """markRequestHandled: the handled row as a round's delta (the counter
+    advances in the same commit, as the engine's outcome delta does)."""
+    touched = store.read().filter(F.col("request_id") == request_id).withColumn(
+        "handled_at", F.to_timestamp(F.lit("2026-01-01 00:00:00"))
     )
-    store.commit(f, round_increment=True)
+    store.commit_delta(
+        touched,
+        round_increment=True,
+        extra={"handled_total": store._manifest["handled_total"] + 1},
+    )
 
 
 def reclaim_forefront(store, request_id):
     """reclaimRequest(forefront=true): fresh negative order_no (O8)."""
     seq = store.order_seq + 1
-    f = store.read().withColumn(
-        "order_no",
-        F.when(F.col("request_id") == request_id, F.lit(-seq).cast("long")).otherwise(
-            F.col("order_no")
-        ),
+    touched = store.read().filter(F.col("request_id") == request_id).withColumn(
+        "order_no", F.lit(-seq).cast("long")
     )
     store._manifest["order_seq"] = seq
-    store.commit(f)
+    store.commit_delta(touched)
 
 
 def drain(store, start_round, expect_max=50):
@@ -220,14 +219,16 @@ def test_resume_from_manifest(spark, tmp_store_dir):
 
 
 def test_commit_records_partition_lineage(spark, tmp_store_dir):
-    """north_rule: per-partition lineage + metrics on every snapshot commit."""
+    """north_rule: per-partition lineage + metrics of the current base,
+    replaced at every snapshot commit (compaction)."""
     store = make_store(spark, tmp_store_dir)
     store.add_requests(urls_df(spark, [f"http://example.com/{i}" for i in range(20)]))
-    last = store._manifest["history"][-1]
-    parts = last["partitions"]
+    assert store._manifest["lineage"] == []  # an enqueue is a delta, not a base
+    store.commit(store.read())
+    parts = store._manifest["lineage"]
     assert sum(p["rows"] for p in parts) == 20
     assert all(p["handled"] == 0 for p in parts)
     row = claim_one(store, 1)
     mark_handled(store, row["request_id"], 1)
-    last = store._manifest["history"][-1]
-    assert sum(p["handled"] for p in last["partitions"]) == 1
+    store.commit(store.read())
+    assert sum(p["handled"] for p in store._manifest["lineage"]) == 1

@@ -1,9 +1,11 @@
 """Merge-on-read frontier: delta commits, compaction, resume, equivalence."""
 
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from crawlee_spark.operators.engine import CrawlEngine, CrawlOptions
 from crawlee_spark.operators.enqueue import EnqueueOptions
@@ -45,7 +47,7 @@ def test_mor_equals_full_rewrite(spark, tmp_store_dir):
     # MOR actually produced deltas (still outstanding at compact_every=100)
     assert s_mor._manifest["deltas"], "expected outstanding delta files"
     # each delta touched O(claimed+fresh) rows, not the whole frontier
-    touched = [h["rows_touched"] for h in s_mor._manifest["history"] if "delta" in h]
+    touched = list(s_mor._manifest["delta_rows"].values())
     total = s_mor.read().count()
     assert all(t <= total for t in touched) and len(touched) >= 3
 
@@ -57,6 +59,7 @@ def test_mor_compaction(spark, tmp_store_dir):
     store.add_requests(
         spark.createDataFrame([(f"http://a.com/{i}",) for i in range(10)], "url string")
     )
+    store.commit(store.read())  # the enqueue is a delta: compact it into a base
     before = snapshot = None
     # two delta commits trigger a compaction into a base snapshot
     d1 = store.read().withColumn("retry_count", F.lit(1))
@@ -69,6 +72,67 @@ def test_mor_compaction(spark, tmp_store_dir):
     assert after == before  # same key set survives compaction
 
 
+def test_compaction_is_the_only_snapshot_writer(spark, tmp_store_dir, monkeypatch):
+    """Every frontier write is a delta: ``snapshots/`` is written only by the
+    compaction ``commit`` inside ``commit_delta``, at every
+    ``compact_every``-th delta — an enqueue never rewrites the frontier.
+    The manifest keeps current state only: one compaction later it has the
+    same keys and no longer list."""
+    store = FrontierStore(spark, tmp_store_dir, num_partitions=4, compact_every=3)
+    writes, inside = [], []
+    parquet = DataFrameWriter.parquet
+
+    def counted(self, path, *a, **kw):
+        writes.append((os.path.relpath(path, tmp_store_dir), tuple(inside)))
+        return parquet(self, path, *a, **kw)
+
+    def tracked(name, fn):
+        def call(self, *a, **kw):
+            inside.append(name)
+            try:
+                return fn(self, *a, **kw)
+            finally:
+                inside.pop()
+
+        return call
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counted)
+    for name in ("commit", "commit_delta"):
+        monkeypatch.setattr(FrontierStore, name, tracked(name, getattr(FrontierStore, name)))
+
+    def manifest():
+        with open(os.path.join(tmp_store_dir, FrontierStore.MANIFEST)) as f:
+            m = json.load(f)
+        return m, {k: len(v) for k, v in m.items() if isinstance(v, (list, dict))}
+
+    store.add_requests(
+        spark.createDataFrame([(f"http://a.com/{i}",) for i in range(10)], "url string")
+    )
+    for i in (1, 2):
+        store.commit_delta(store.read().limit(3).withColumn("retry_count", F.lit(i)))
+    first, first_sizes = manifest()
+    for i in (3, 4, 5):
+        store.commit_delta(store.read().limit(3).withColumn("retry_count", F.lit(i)))
+    second, second_sizes = manifest()
+
+    delta = ("commit_delta",)
+    compaction = ("commit_delta", "commit")
+    assert writes == [
+        ("deltas/d000000", delta),  # add_requests
+        ("deltas/d000001", delta),
+        ("deltas/d000002", delta),
+        ("snapshots/v000000", compaction),
+        ("deltas/d000000", delta),
+        ("deltas/d000001", delta),
+        ("deltas/d000002", delta),
+        ("snapshots/v000001", compaction),
+    ]
+    assert (first["snapshot"], second["snapshot"]) == (0, 1)
+    assert set(first) == set(second)
+    assert first_sizes == second_sizes and first["lineage"]
+    assert sum(p["rows"] for p in second["lineage"]) == 10
+
+
 def test_dedup_exact_across_base_and_deltas(spark, tmp_store_dir):
     """One candidate batch holding base-only ids, delta-only ids and new
     ids: the seen-set anti-join against the merge-on-read frontier returns
@@ -77,6 +141,7 @@ def test_dedup_exact_across_base_and_deltas(spark, tmp_store_dir):
     store.add_requests(
         spark.createDataFrame([(f"http://a.com/{i}",) for i in range(40)], "url string")
     )
+    store.commit(store.read())  # the enqueue is a delta: compact it into a base
     store.commit_delta(
         store.prepare_fresh(
             spark.createDataFrame([(f"http://a.com/{i}",) for i in range(40, 50)], "url string")
@@ -102,8 +167,9 @@ def test_lease_delta_committed_mid_round(spark, tmp_store_dir):
     from crawlee_spark.operators.frontier import STATE_BEFORE_NAV
 
     store, engine = crawl(spark, tmp_store_dir, rounds=1)
-    # delta 0 is the round-1 lease stamp; delta 1 the outcomes
-    lease = spark.read.parquet(store._delta_dir(0))
+    # delta 0 is the seed enqueue, delta 1 the round-1 lease stamp, delta 2
+    # the outcomes
+    lease = spark.read.parquet(store._delta_dir(1))
     rows = lease.collect()
     assert rows and all(r["lease_until"] == 1 for r in rows)
     assert all(r["state"] == STATE_BEFORE_NAV for r in rows)
@@ -117,7 +183,7 @@ def test_lease_blocks_same_round_reclaim(spark, tmp_store_dir):
     from crawlee_spark.operators.scheduler import eligible_requests
 
     store, engine = crawl(spark, tmp_store_dir, rounds=1)
-    leased_only = spark.read.parquet(store._delta_dir(0))
+    leased_only = spark.read.parquet(store._delta_dir(1))  # the round-1 lease
     assert eligible_requests(leased_only, round_id=1).count() == 0
     assert eligible_requests(leased_only, round_id=2).count() == leased_only.count()
 
@@ -205,14 +271,13 @@ def test_legacy_manifest_backfills_delta_stats(spark, tmp_store_dir, monkeypatch
     outstanding deltas with no stats; the sums must be backfilled from the
     delta files — not silently treated as 0, which would unconditionally
     broadcast arbitrarily large deltas (ADVICE r3)."""
-    import json
-
     from crawlee_spark.operators import sizing
 
     store = FrontierStore(spark, tmp_store_dir, num_partitions=4, compact_every=100)
     store.add_requests(
         spark.createDataFrame([(f"http://a.com/{i}",) for i in range(10)], "url string")
     )
+    store.commit(store.read())  # the enqueue is a delta: compact it into a base
     store.commit_delta(store.read().limit(4).withColumn("retry_count", F.lit(1)))
     want_rows, want_bytes = store._outstanding_delta_stats()
     assert want_rows == 4 and want_bytes > 0

@@ -28,6 +28,7 @@ def store(spark, tmp_path_factory):
             [(f"https://h{i % 5}.example.com/p{i}",) for i in range(50)], "url string"
         )
     )
+    s.commit(s.read())  # the enqueue is a delta: compact it into a base
     return s
 
 
@@ -124,6 +125,7 @@ def test_mor_delta_broadcast_gates_on_bytes(spark, tmp_path_factory, monkeypatch
     s.add_requests(
         spark.createDataFrame([(f"http://a.com/{i}",) for i in range(10)], "url string")
     )
+    s.commit(s.read())  # the enqueue is a delta: compact it into a base
     s.commit_delta(s.read().limit(3).withColumn("retry_count", F.lit(1)))
     assert not s._deltas_broadcastable()
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -158,6 +160,7 @@ def test_mor_read_merges_without_frontier_shuffle(spark, tmp_path_factory):
     s.add_requests(
         spark.createDataFrame([(f"http://a.com/{i}",) for i in range(10)], "url string")
     )
+    s.commit(s.read())  # the enqueue is a delta: compact it into a base
     s.commit_delta(s.read().limit(3).withColumn("retry_count", F.lit(1)))
 
     plan = explain_str(s.read(), "simple")

@@ -1,6 +1,7 @@
-"""Plan dumps for crawl rounds.
+"""Plan dumps for crawl rounds and for the entry queries.
 
     python tools/round_plans.py OUT_DIR [--seed 1] [--rounds 2]
+    python tools/round_plans.py OUT_DIR --queries [NAME ...] [--sf-dir DIR]
 
 Sets up the perfbench ``crawl`` workload at ``--seed`` (its generated pages
 and robots table, ``CRAWL_POLICY``, enqueue strategy ``all``,
@@ -16,6 +17,12 @@ physical plan (``tests/plan_capture.py``):
 - ``crawl_outputs.txt``: after the last round, the row count and an
   order-independent sha-256 of ``results()``, ``outcomes()``, ``skipped()``
   and ``store.read()``, and ``final_statistics()``.
+
+With ``--queries`` it dumps query plans instead: each named
+``__spark_entry__.queries()`` entry (all of them when no name is given),
+built over ``--sf-dir`` (default ``$SPARK_GRAFT_SF_DIR``), goes to
+``<name>.txt`` as its formatted physical plan, with the data directory
+written as ``$SF_DIR``.
 
 Run from the repository root; the program and the capture helper are
 imported from the working directory, so the same script dumps any checkout
@@ -98,12 +105,27 @@ def dump_crawl(spark, out: str, seed: int, rounds: int) -> None:
         shutil.rmtree(work, ignore_errors=True)
 
 
+def dump_queries(spark, out: str, sf_dir: str, names: list[str]) -> None:
+    import __spark_entry__ as entry
+    from tests.plan_capture import plan_string
+
+    qs = entry.queries()
+    for name in names or qs:
+        with open(f"{out}/{name}.txt", "w") as f:
+            f.write(plan_string(qs[name](spark, sf_dir)).replace(sf_dir, "$SF_DIR"))
+        print(f"wrote {out}/{name}.txt")
+
+
 def main() -> None:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("out")
     p.add_argument("--seed", type=int, default=1)
     p.add_argument("--rounds", type=int, default=2)
+    p.add_argument("--queries", nargs="*", metavar="NAME", help="dump query plans (default: all)")
+    p.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
     args = p.parse_args()
+    if args.queries is not None and not args.sf_dir:
+        p.error("--queries needs --sf-dir or $SPARK_GRAFT_SF_DIR")
 
     # the program and the capture helper come from the working directory
     sys.path.insert(0, os.getcwd())
@@ -114,7 +136,10 @@ def main() -> None:
     spark = get_spark("round-plans", master="local[4]", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        dump_crawl(spark, args.out, args.seed, args.rounds)
+        if args.queries is None:
+            dump_crawl(spark, args.out, args.seed, args.rounds)
+        else:
+            dump_queries(spark, args.out, args.sf_dir.rstrip("/"), args.queries)
     finally:
         spark.stop()
 
